@@ -65,13 +65,6 @@ def shingle_rows(docs: DataFrame, n: int = 3) -> DataFrame:
     return sh.select("doc_id", "s").dropDuplicates(["doc_id", "s"])
 
 
-def shingle_frame(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingles array) — for set ops on candidate pairs."""
-    return shingle_rows(docs, n).groupBy("doc_id").agg(
-        F.collect_set("s").alias("shingles")
-    )
-
-
 def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup groups: one row per distinct text with the keeper
     (min doc_id) and copy count. Content-hash groupBy — the canonical

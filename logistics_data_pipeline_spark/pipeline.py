@@ -31,7 +31,6 @@ from .operators.star import (
     dim_order,
     dim_status,
     dim_time,
-    fact_event,
     fact_event_fast,
 )
 from .operators.validity import invalid_events, valid_events
@@ -50,39 +49,27 @@ def build_warehouse(
     bronze: DataFrame,
     restamp: datetime | None = None,
     persist: bool = True,
-    fast_fact: bool = True,
 ) -> dict[str, DataFrame]:
     """Bronze → staging → valid/invalid → star, as lazy DataFrames.
 
-    ``fast_fact`` uses the join-free fact formulation (one shuffle,
-    proven output-identical to the six-join reference shape — see
-    star.fact_event_fast); pass False for the reference-shaped build.
-    """
+    The fact uses the join-free formulation (star.fact_event_fast: one
+    shuffle, output-identical to the six-join reference shape that
+    star.fact_event keeps as the test reference)."""
     stg = stage_events(bronze, restamp=restamp)
     valid = valid_events(stg)
     if persist:
         valid = valid.persist(StorageLevel.MEMORY_AND_DISK)
     invalid = invalid_events(stg)
-    d_time = dim_time(valid)
-    d_location = dim_location(valid)
-    d_status = dim_status(valid)
-    d_carrier = dim_carrier(valid)
-    d_order = dim_order(valid)
-    fact = (
-        fact_event_fast(valid)
-        if fast_fact
-        else fact_event(valid, d_order, d_time, d_status, d_location, d_carrier)
-    )
     return {
         "stg_logistics_events": stg,
         "int_valid_logistics_events": valid,
         "int_invalid_logistics_events": invalid,
-        "dim_time": d_time,
-        "dim_location": d_location,
-        "dim_status": d_status,
-        "dim_carrier": d_carrier,
-        "dim_order": d_order,
-        "fact_event": fact,
+        "dim_time": dim_time(valid),
+        "dim_location": dim_location(valid),
+        "dim_status": dim_status(valid),
+        "dim_carrier": dim_carrier(valid),
+        "dim_order": dim_order(valid),
+        "fact_event": fact_event_fast(valid),
         "dq_invalid_delivery_summary": dq_invalid_delivery_summary(stg, invalid),
     }
 

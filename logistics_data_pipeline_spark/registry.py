@@ -49,7 +49,6 @@ from __future__ import annotations
 
 import threading
 from collections.abc import Callable
-from functools import wraps
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,47 +108,124 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _QUERIES["kpi_carrier_performance"](spark, sf_dir)
 
 
-# --- layer builders (lazy DataFrames; Catalyst sees the whole lineage) -----
+# --- session assets: silver layers and shared indexes ----------------------
 #
-# `valid` feeds six star-schema consumers (5 dims + the fact's probe
-# side), so it is persisted once per (session, sf_dir): within a single
-# fact build the branches hit the cache instead of re-scanning parquet,
-# and repeated registry calls in the same session reuse it. At cluster
-# scale this is the moral equivalent of materializing the silver layer.
+# The silver layers (stg, valid) and the shared dedup/ANN indexes are the
+# local stand-ins for tables a cluster pipeline writes once and every
+# consumer joins (valid alone feeds the five dims and the fact; the exact
+# Jaccard pair list feeds eight dedup keys). Invariants:
+# - one build per (session, sf_dir, name): a builder reaches its inputs
+#   through _dedup_shared, and each name has one lock, taken in
+#   dependency order (the graph is acyclic, so this cannot deadlock);
+# - every entry is persisted;
+# - entries are released only by clear_session_caches(keep_layers=False).
 
-_VALID_CACHE: dict[tuple[int, str], DataFrame] = {}
-_STG_CACHE: dict[tuple[int, str], DataFrame] = {}
+
+def _docs(spark, sf):
+    return load_table(spark, sf, "documents")
+
+
+def _emb(spark, sf):
+    return load_table(spark, sf, "embeddings")
+
+
+def _stg_build(spark, sf):
+    stg = staging.stage_events(bronze_events(spark, sf))
+    if len(stg.inputFiles()) < 8:  # single-file parquet -> widen
+        stg = stg.repartition(8)
+    return stg
+
+
+def _srp_sigs_build(spark, sf):
+    emb = _emb(spark, sf)
+    nb, bb = llm_sim._srp_dims(emb)
+    return llm_sim.srp_buckets(emb, n_bits=nb, band_bits=bb)
+
+
+_ASSETS: dict[str, QueryFn] = {
+    "stg": _stg_build,
+    "valid": lambda spark, sf: validity.valid_events(_stg(spark, sf)),
+    # word-3-gram shingle index, and the 5-gram one decontamination shares
+    "sh3": lambda spark, sf: llm_dedup.shingle_rows(_docs(spark, sf), 3),
+    "sh5": lambda spark, sf: llm_dedup.shingle_rows(_docs(spark, sf), 5),
+    # unfiltered exact word-3-gram Jaccard pairs
+    "jac_scores": lambda spark, sf: llm_dedup.ngram_pair_scores(
+        _docs(spark, sf), shingles=_dedup_shared(spark, sf, "sh3")
+    ),
+    # unfiltered containment (8-gram) pairs
+    "con_scores": lambda spark, sf: llm_dedup.containment_scores(_docs(spark, sf)),
+    # SimHash signatures + band keys
+    "sim_sig": lambda spark, sf: llm_dedup.simhash(_docs(spark, sf)),
+    # 64 minhashes + exact shingle set per doc
+    "mh_sig": lambda spark, sf: llm_dedup.minhash_sig_table(
+        _docs(spark, sf), shingles=_dedup_shared(spark, sf, "sh3")
+    ),
+    # Jaccard near-dup connected components
+    "components": lambda spark, sf: llm_dedup.neardup_components(
+        _docs(spark, sf),
+        pairs=_dedup_shared(spark, sf, "jac_scores").filter(F.col("jaccard") >= 0.7),
+    ),
+    # exact cosine near-dup pairs (block-pair join)
+    "emb_pairs": lambda spark, sf: llm_sim.embedding_neardup(_emb(spark, sf)),
+    # SRP-LSH banded signatures at the governor width
+    "srp_sigs": _srp_sigs_build,
+    # item-pagerank graph table
+    "copurchase_edges": lambda spark, sf: analytics.copurchase_edges(
+        load_table(spark, sf, "lineitem")
+    ),
+    # exact one-round k-means cell assignment
+    "kc_cells": lambda spark, sf: llm_sim.kmeans_cells_exact(_emb(spark, sf)),
+    # exact seeded PQ train round + assignment; the train round is
+    # eagerly checkpointed inside pq_codes_exact
+    "pq_codes": lambda spark, sf: llm_sim.pq_codes_exact(
+        _emb(spark, sf), checkpoint=True
+    ),
+    # IVF and IVF-PQ retrieval frames at registered params
+    "knn_ivf": lambda spark, sf: llm_sim.knn_ivf(_emb(spark, sf)),
+    "knn_ivfpq": lambda spark, sf: llm_sim.knn_ivfpq(_emb(spark, sf)),
+    # PQ codebooks for the compressed beam (S·k = 128 rows)
+    "beam_pq_books": lambda spark, sf: llm_sim.beam_pq_books(_emb(spark, sf)),
+    # 8-byte/vector packed PQ corpus codes, built against the codebooks.
+    # The NSW_N_QUERIES cutoffs here and in nsw_graph MUST track
+    # knn_graph_beam's default, or the index includes query vectors.
+    "beam_pq_codes": lambda spark, sf: llm_sim.pq_assign_packed(
+        _emb(spark, sf).filter(F.col("vec_id") >= llm_sim.NSW_N_QUERIES),
+        llm_sim._books_tensor(_dedup_shared(spark, sf, "beam_pq_books")),
+    ).localCheckpoint(eager=True),
+    # symmetrized kNN graph (the graph-ANN index)
+    "nsw_graph": lambda spark, sf: llm_sim._knn_graph(
+        _emb(spark, sf).filter(F.col("vec_id") >= llm_sim.NSW_N_QUERIES)
+    ).localCheckpoint(eager=True),
+    # checkpointed full covariance matrix (d² rows)
+    "cov_mat": lambda spark, sf: llm_sim._cov_full_matrix(_emb(spark, sf))
+    .coalesce(1)
+    .localCheckpoint(eager=True),
+    # winnowing-selected fingerprint frame
+    "winnow_fp": lambda spark, sf: llm_text._winnow_selected(
+        _docs(spark, sf), llm_text.WINNOW_K, llm_text.WINNOW_W
+    ),
+}
+_LOCKS = {name: threading.Lock() for name in _ASSETS}
+_SHARED: dict[tuple[int, str, str], DataFrame] = {}
+
+
+def _dedup_shared(spark, sf, name):
+    key = (id(spark.sparkContext), sf, name)
+    df = _SHARED.get(key)
+    if df is None:
+        with _LOCKS[name]:
+            df = _SHARED.get(key)
+            if df is None:
+                df = _SHARED[key] = _ASSETS[name](spark, sf).persist()
+    return df
 
 
 def _stg(spark, sf_dir):
-    """Staged events, persisted once per (session, sf_dir) like the
-    valid layer below: the bronze→staging chain (JSON-ish string
-    parsing + dirty-row classification) feeds the valid/invalid split,
-    the DQ summary, and four schema-test scans — materializing it once
-    is the silver-layer equivalent of `_valid`'s cache (measured:
-    dbt_schema_tests 4.7 s → ~3 s warm at sf0.1)."""
-    key = (id(spark.sparkContext), sf_dir)
-    cached = _STG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    stg = staging.stage_events(bronze_events(spark, sf_dir))
-    if len(stg.inputFiles()) < 8:  # single-file parquet -> widen (see _valid)
-        stg = stg.repartition(8)
-    df = stg.persist()
-    _STG_CACHE[key] = df
-    return df
+    return _dedup_shared(spark, sf_dir, "stg")
 
 
 def _valid(spark, sf_dir):
-    key = (id(spark.sparkContext), sf_dir)
-    cached = _VALID_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # _stg already widens single-file inputs to ≥8 partitions and
-    # persists, so the validity projection inherits its parallelism.
-    df = validity.valid_events(_stg(spark, sf_dir)).persist()
-    _VALID_CACHE[key] = df
-    return df
+    return _dedup_shared(spark, sf_dir, "valid")
 
 
 def clear_session_caches(
@@ -162,9 +238,9 @@ def clear_session_caches(
     Three layers of hygiene, cheapest first:
     - operator-scoped persists (``session.track_persist``) — created
       fresh per query call, never releasable from inside a lazy plan;
-    - optionally the memoized stg/valid silver layers (bounded, shared,
-      deliberately kept by default — ``keep_layers=False`` for a full
-      reset);
+    - optionally the session assets (silver layers and shared indexes;
+      bounded, shared, deliberately kept by default —
+      ``keep_layers=False`` for a full reset);
     - a GC nudge (Python then JVM) so the ContextCleaner's weak refs
       collect dead localCheckpoint blocks and shuffle state from
       ``exact_ntile`` / ``label_propagation`` lineage truncation.
@@ -177,18 +253,10 @@ def clear_session_caches(
 
     n = release_tracked_persists(blocking=blocking)
     if not keep_layers:
-        for cache in (_STG_CACHE, _VALID_CACHE, _DEDUP_CACHE):
-            for key in [k for k in cache if k[0] == id(spark.sparkContext)]:
-                cache.pop(key).unpersist(blocking=blocking)
+        for key in list(_SHARED):
+            if key[0] == id(spark.sparkContext):
+                _SHARED.pop(key).unpersist(blocking=blocking)
                 n += 1
-        # Keep the build-lock table's lifecycle aligned with the cache
-        # (ADVICE r12): id() of a collected SparkContext can be reused,
-        # which would alias a new session onto a stale lock entry.
-        with _DEDUP_LOCKS_GUARD:
-            for key in [
-                k for k in _DEDUP_LOCKS if k[0] == id(spark.sparkContext)
-            ]:
-                _DEDUP_LOCKS.pop(key)
     gc.collect()
     try:
         spark._jvm.System.gc()
@@ -224,14 +292,6 @@ def _warehouse_views(spark, sf_dir):
     }
 
 
-def _q(fn):
-    @wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return fn(spark, sf_dir)
-
-    return wrapped
-
-
 # --- registrations ---------------------------------------------------------
 
 register("bronze_events", bronze_events, oracles.q("SELECT * FROM bronze"))
@@ -241,125 +301,117 @@ register("invalid_events", _invalid, oracles.q("SELECT * FROM invalid"))
 
 register(
     "dq_invalid_delivery_summary",
-    _q(lambda spark, sf: dqs.dq_invalid_delivery_summary(_stg(spark, sf), _invalid(spark, sf))),
+    lambda spark, sf: dqs.dq_invalid_delivery_summary(_stg(spark, sf), _invalid(spark, sf)),
     oracles.q("SELECT * FROM dq_summary"),
 )
 
 register(
     "dim_time",
-    _q(lambda spark, sf: star.dim_time(_valid(spark, sf))),
+    lambda spark, sf: star.dim_time(_valid(spark, sf)),
     oracles.q("SELECT * FROM dim_time"),
 )
 register(
     "dim_location",
-    _q(lambda spark, sf: star.dim_location(_valid(spark, sf))),
+    lambda spark, sf: star.dim_location(_valid(spark, sf)),
     oracles.q("SELECT * FROM dim_location"),
 )
 register(
     "dim_status",
-    _q(lambda spark, sf: star.dim_status(_valid(spark, sf))),
+    lambda spark, sf: star.dim_status(_valid(spark, sf)),
     oracles.q("SELECT * FROM dim_status"),
 )
 register(
     "dim_carrier",
-    _q(lambda spark, sf: star.dim_carrier(_valid(spark, sf))),
+    lambda spark, sf: star.dim_carrier(_valid(spark, sf)),
     oracles.q("SELECT * FROM dim_carrier"),
 )
 register(
     "dim_order",
-    _q(lambda spark, sf: star.dim_order(_valid(spark, sf))),
+    lambda spark, sf: star.dim_order(_valid(spark, sf)),
     oracles.q("SELECT * FROM dim_order"),
 )
 register("fact_event", _fact, oracles.q("SELECT * FROM fact_event"))
 
 register(
     "kpi_carrier_performance",
-    _q(lambda spark, sf: kpi.carrier_performance(_fact(spark, sf), star.dim_carrier(_valid(spark, sf)))),
+    lambda spark, sf: kpi.carrier_performance(_fact(spark, sf), star.dim_carrier(_valid(spark, sf))),
     oracles.KPI_CARRIER_SQL,
 )
 register(
     "kpi_active_shipments",
-    _q(
-        lambda spark, sf: kpi.active_shipments(
-            _fact(spark, sf),
-            star.dim_location(_valid(spark, sf)),
-            star.dim_status(_valid(spark, sf)),
-            star.dim_carrier(_valid(spark, sf)),
-        )
+    lambda spark, sf: kpi.active_shipments(
+        _fact(spark, sf),
+        star.dim_location(_valid(spark, sf)),
+        star.dim_status(_valid(spark, sf)),
+        star.dim_carrier(_valid(spark, sf)),
     ),
     oracles.KPI_ACTIVE_SHIPMENTS_SQL,
 )
 register(
     "kpi_weight_distribution",
-    _q(lambda spark, sf: kpi.weight_distribution(_fact(spark, sf))),
+    lambda spark, sf: kpi.weight_distribution(_fact(spark, sf)),
     oracles.KPI_WEIGHT_SQL,
 )
 register(
     "kpi_weight_histogram",  # in-engine 50-bin weight histogram (dashboards.py scale path)
-    _q(lambda spark, sf: _dashboards.weight_histogram_binned(_fact(spark, sf))),
+    lambda spark, sf: _dashboards.weight_histogram_binned(_fact(spark, sf)),
     oracles.KPI_WEIGHT_HISTOGRAM_SQL,
 )
 register(
     "kpi_status_distribution",
-    _q(lambda spark, sf: kpi.status_distribution(_fact(spark, sf), star.dim_status(_valid(spark, sf)))),
+    lambda spark, sf: kpi.status_distribution(_fact(spark, sf), star.dim_status(_valid(spark, sf))),
     oracles.KPI_STATUS_SQL,
 )
 
 register(
     "monitor_scalar_metrics",
-    _q(lambda spark, sf: monitoring.scalar_metrics(bronze_events(spark, sf))),
+    lambda spark, sf: monitoring.scalar_metrics(bronze_events(spark, sf)),
     oracles.MONITOR_SCALAR_SQL,
 )
 register(
     "monitor_ingest_trend",
-    _q(lambda spark, sf: monitoring.ingest_trend(bronze_events(spark, sf))),
+    lambda spark, sf: monitoring.ingest_trend(bronze_events(spark, sf)),
     oracles.MONITOR_TREND_SQL,
 )
 register(
     "monitor_dq_rollup",
-    _q(
-        lambda spark, sf: monitoring.dq_rollup(
-            dqs.dq_invalid_delivery_summary(_stg(spark, sf), _invalid(spark, sf))
-        )
+    lambda spark, sf: monitoring.dq_rollup(
+        dqs.dq_invalid_delivery_summary(_stg(spark, sf), _invalid(spark, sf))
     ),
     oracles.MONITOR_DQ_ROLLUP_SQL,
 )
 register(
     "monitor_recent_events",
-    _q(lambda spark, sf: monitoring.recent_events(bronze_events(spark, sf))),
+    lambda spark, sf: monitoring.recent_events(bronze_events(spark, sf)),
     oracles.MONITOR_RECENT_SQL,
 )
 
 register(
     "dq_checks",
-    _q(lambda spark, sf: quality.dq_check_counts(bronze_events(spark, sf), DQ_AS_OF_DATE)),
+    lambda spark, sf: quality.dq_check_counts(bronze_events(spark, sf), DQ_AS_OF_DATE),
     oracles.DQ_CHECKS_SQL,
 )
 
 register(
     "ingest_dedup_antijoin",
-    _q(
-        lambda spark, sf: incremental_insert(
-            load_table(spark, sf, "events").filter("event_id % 10 < 5"),
-            load_table(spark, sf, "events").filter("event_id % 10 < 3"),
-        )
+    lambda spark, sf: incremental_insert(
+        load_table(spark, sf, "events").filter("event_id % 10 < 5"),
+        load_table(spark, sf, "events").filter("event_id % 10 < 3"),
     ),
     oracles.INGEST_ANTIJOIN_SQL,
 )
 
 register(
     "dbt_schema_tests",
-    _q(
-        lambda spark, sf: schema_tests.star_schema_tests(
-            _warehouse_views(spark, sf)
-        )
+    lambda spark, sf: schema_tests.star_schema_tests(
+        _warehouse_views(spark, sf)
     ),
     oracles.SCHEMA_TESTS_SQL,
 )
 
 register(
     "gen_synthetic_events",
-    _q(lambda spark, sf: generator.synthetic_events(spark, 10000)),
+    lambda spark, sf: generator.synthetic_events(spark, 10000),
     generator.SYNTHETIC_EVENTS_SQL,
 )
 
@@ -367,31 +419,27 @@ register(
 
 register(
     "tpch_q1_pricing_summary",
-    _q(lambda spark, sf: analytics.q1_pricing_summary(load_table(spark, sf, "lineitem"))),
+    lambda spark, sf: analytics.q1_pricing_summary(load_table(spark, sf, "lineitem")),
     analytics.Q1_SQL,
 )
 register(
     "tpch_q3_shipping_priority",
-    _q(
-        lambda spark, sf: analytics.q3_shipping_priority(
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
+    lambda spark, sf: analytics.q3_shipping_priority(
+        load_table(spark, sf, "customer"),
+        load_table(spark, sf, "orders"),
+        load_table(spark, sf, "lineitem"),
     ),
     analytics.Q3_SQL,
 )
 register(
     "tpch_q5_local_supplier_volume",
-    _q(
-        lambda spark, sf: analytics.q5_local_supplier_volume(
-            load_table(spark, sf, "region"),
-            load_table(spark, sf, "nation"),
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
+    lambda spark, sf: analytics.q5_local_supplier_volume(
+        load_table(spark, sf, "region"),
+        load_table(spark, sf, "nation"),
+        load_table(spark, sf, "customer"),
+        load_table(spark, sf, "supplier"),
+        load_table(spark, sf, "orders"),
+        load_table(spark, sf, "lineitem"),
     ),
     analytics.Q5_SQL,
 )
@@ -403,7 +451,7 @@ def _t(spark, sf, *names):
 
 register(
     "dim_order_scd2",
-    _q(lambda spark, sf: star.dim_order_scd2(_valid(spark, sf))),
+    lambda spark, sf: star.dim_order_scd2(_valid(spark, sf)),
     oracles.q(
         """
 SELECT order_id, status,
@@ -425,99 +473,85 @@ ORDER BY order_id, version
 )
 register(
     "tpch_q4_order_priority",
-    _q(lambda spark, sf: tx.q4_order_priority(*_t(spark, sf, "orders", "lineitem"))),
+    lambda spark, sf: tx.q4_order_priority(*_t(spark, sf, "orders", "lineitem")),
     tx.Q4_SQL,
 )
 register(
     "tpch_q6_forecast_revenue",
-    _q(lambda spark, sf: tx.q6_forecast_revenue(load_table(spark, sf, "lineitem"))),
+    lambda spark, sf: tx.q6_forecast_revenue(load_table(spark, sf, "lineitem")),
     tx.Q6_SQL,
 )
 register(
     "tpch_q7_nation_volume",
-    _q(
-        lambda spark, sf: tx.q7_nation_volume(
-            *_t(spark, sf, "nation", "customer", "supplier", "orders", "lineitem")
-        )
+    lambda spark, sf: tx.q7_nation_volume(
+        *_t(spark, sf, "nation", "customer", "supplier", "orders", "lineitem")
     ),
     tx.Q7_SQL,
 )
 register(
     "tpch_q8_market_share",
-    _q(
-        lambda spark, sf: tx.q8_market_share(
-            *_t(spark, sf, "region", "nation", "customer", "supplier", "orders", "lineitem")
-        )
+    lambda spark, sf: tx.q8_market_share(
+        *_t(spark, sf, "region", "nation", "customer", "supplier", "orders", "lineitem")
     ),
     tx.Q8_SQL,
 )
 register(
     "tpch_q9_product_profit",
-    _q(
-        lambda spark, sf: tx.q9_product_profit(
-            *_t(spark, sf, "nation", "supplier", "part", "lineitem")
-        )
+    lambda spark, sf: tx.q9_product_profit(
+        *_t(spark, sf, "nation", "supplier", "part", "lineitem")
     ),
     tx.Q9_SQL,
 )
 register(
     "tpch_q10_returned_items",
-    _q(
-        lambda spark, sf: tx.q10_returned_items(
-            *_t(spark, sf, "nation", "customer", "orders", "lineitem")
-        )
+    lambda spark, sf: tx.q10_returned_items(
+        *_t(spark, sf, "nation", "customer", "orders", "lineitem")
     ),
     tx.Q10_SQL,
 )
 register(
     "tpch_q13_customer_distribution",
-    _q(lambda spark, sf: tx.q13_customer_distribution(*_t(spark, sf, "customer", "orders"))),
+    lambda spark, sf: tx.q13_customer_distribution(*_t(spark, sf, "customer", "orders")),
     tx.Q13_SQL,
 )
 register(
     "tpch_q14_promo_revenue",
-    _q(lambda spark, sf: tx.q14_promo_revenue(*_t(spark, sf, "part", "lineitem"))),
+    lambda spark, sf: tx.q14_promo_revenue(*_t(spark, sf, "part", "lineitem")),
     tx.Q14_SQL,
 )
 register(
     "tpch_q15_top_supplier",
-    _q(lambda spark, sf: tx.q15_top_supplier(*_t(spark, sf, "supplier", "lineitem"))),
+    lambda spark, sf: tx.q15_top_supplier(*_t(spark, sf, "supplier", "lineitem")),
     tx.Q15_SQL,
 )
 register(
     "tpch_q17_small_qty_revenue",
-    _q(lambda spark, sf: tx.q17_small_quantity_revenue(*_t(spark, sf, "part", "lineitem"))),
+    lambda spark, sf: tx.q17_small_quantity_revenue(*_t(spark, sf, "part", "lineitem")),
     tx.Q17_SQL,
 )
 register(
     "tpch_q16_supplier_counts",
-    _q(
-        lambda spark, sf: tx.q16_supplier_counts(
-            *_t(spark, sf, "part", "supplier", "lineitem")
-        )
+    lambda spark, sf: tx.q16_supplier_counts(
+        *_t(spark, sf, "part", "supplier", "lineitem")
     ),
     tx.Q16_SQL,
 )
 register(
     "tpch_q18_large_orders",
-    _q(
-        lambda spark, sf: tx.q18_large_orders(
-            *_t(spark, sf, "customer", "orders", "lineitem")
-        )
+    lambda spark, sf: tx.q18_large_orders(
+        *_t(spark, sf, "customer", "orders", "lineitem")
     ),
     tx.Q18_SQL,
 )
 register(
     "tpch_q19_disjunctive_revenue",
-    _q(lambda spark, sf: tx.q19_disjunctive_revenue(*_t(spark, sf, "part", "lineitem"))),
+    lambda spark, sf: tx.q19_disjunctive_revenue(*_t(spark, sf, "part", "lineitem")),
     tx.Q19_SQL,
 )
 register(
     "tpch_q21_waiting_suppliers",
-    _q(
-        lambda spark, sf: tx.q21_waiting_suppliers(
-            *_t(spark, sf, "nation", "supplier", "orders", "lineitem")
-        )
+    lambda spark, sf: tx.q21_waiting_suppliers(
+        *_t(spark, sf, "nation", "supplier", "orders", "lineitem")
     ),
     tx.Q21_SQL,
 )
@@ -526,542 +560,388 @@ register(
 # relation from shipment history; q12 buckets by return flag).
 register(
     "tpch_q2_min_cost_supplier",
-    _q(
-        lambda spark, sf: tx.q2_min_cost_supplier(
-            *_t(spark, sf, "region", "nation", "supplier", "part", "lineitem")
-        )
+    lambda spark, sf: tx.q2_min_cost_supplier(
+        *_t(spark, sf, "region", "nation", "supplier", "part", "lineitem")
     ),
     tx.Q2_SQL,
 )
 register(
     "tpch_q11_important_parts",
-    _q(
-        lambda spark, sf: tx.q11_important_parts(
-            *_t(spark, sf, "nation", "supplier", "lineitem")
-        )
+    lambda spark, sf: tx.q11_important_parts(
+        *_t(spark, sf, "nation", "supplier", "lineitem")
     ),
     tx.Q11_SQL,
 )
 register(
     "tpch_q12_priority_shipping",
-    _q(lambda spark, sf: tx.q12_priority_shipping(*_t(spark, sf, "orders", "lineitem"))),
+    lambda spark, sf: tx.q12_priority_shipping(*_t(spark, sf, "orders", "lineitem")),
     tx.Q12_SQL,
 )
 register(
     "tpch_q20_part_promotion",
-    _q(
-        lambda spark, sf: tx.q20_part_promotion(
-            *_t(spark, sf, "region", "nation", "supplier", "part", "lineitem")
-        )
+    lambda spark, sf: tx.q20_part_promotion(
+        *_t(spark, sf, "region", "nation", "supplier", "part", "lineitem")
     ),
     tx.Q20_SQL,
 )
 register(
     "tpch_q22_idle_customers",
-    _q(lambda spark, sf: tx.q22_idle_customers(*_t(spark, sf, "customer", "orders"))),
+    lambda spark, sf: tx.q22_idle_customers(*_t(spark, sf, "customer", "orders")),
     tx.Q22_SQL,
 )
 register(
     "stream_sessionize_closed",
-    _q(
-        lambda spark, sf: streaming_windowed.sessionize_closed_batch(
-            spark, load_table(spark, sf, "events")
-        )
+    lambda spark, sf: streaming_windowed.sessionize_closed_batch(
+        spark, load_table(spark, sf, "events")
     ),
     streaming_windowed.SESSIONIZE_CLOSED_SQL,
 )
 register(
     "events_asof_join",
-    _q(lambda spark, sf: temporal.asof_join_prior_signup(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.asof_join_prior_signup(load_table(spark, sf, "events")),
     temporal.ASOF_JOIN_SQL,
 )
 register(
     "events_tumbling_windows",
-    _q(lambda spark, sf: temporal.tumbling_window_counts(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.tumbling_window_counts(load_table(spark, sf, "events")),
     temporal.TUMBLING_WINDOW_SQL,
 )
 register(
     "events_daily_type_pivot",
-    _q(lambda spark, sf: temporal.daily_type_pivot(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.daily_type_pivot(load_table(spark, sf, "events")),
     temporal.DAILY_TYPE_PIVOT_SQL,
 )
 register(
     "events_daily_type_unpivot",
-    _q(lambda spark, sf: temporal.daily_type_unpivot(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.daily_type_unpivot(load_table(spark, sf, "events")),
     temporal.DAILY_TYPE_UNPIVOT_SQL,
 )
 register(
     "events_daily_type_cube",
-    _q(lambda spark, sf: temporal.daily_type_cube(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.daily_type_cube(load_table(spark, sf, "events")),
     temporal.DAILY_TYPE_CUBE_SQL,
 )
 register(
     "events_click_attribution",
-    _q(lambda spark, sf: temporal.purchase_click_attribution(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.purchase_click_attribution(load_table(spark, sf, "events")),
     temporal.PURCHASE_CLICK_ATTRIBUTION_SQL,
 )
 register(
     "events_attribution_models",  # linear/first/last/time-decay credits
-    _q(lambda spark, sf: temporal.attribution_models(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.attribution_models(load_table(spark, sf, "events")),
     temporal.ATTRIBUTION_MODELS_SQL,
 )
 register(
     "events_ewma_control",  # EWMA control chart over hourly volumes
-    _q(lambda spark, sf: temporal.ewma_control(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.ewma_control(load_table(spark, sf, "events")),
     temporal.EWMA_CONTROL_SQL,
 )
 register(
     "events_top_paths",  # top 3-step session paths + purchase-ending rate
-    _q(lambda spark, sf: temporal.top_paths(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.top_paths(load_table(spark, sf, "events")),
     temporal.TOP_PATHS_SQL,
 )
 register(
     "events_markov_stationary",  # behavior-chain fixed point, unrolled oracle
-    _q(lambda spark, sf: temporal.markov_stationary(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.markov_stationary(load_table(spark, sf, "events")),
     temporal.MARKOV_STATIONARY_SQL,
 )
 register(
     "events_stl_decompose",  # trend + daily seasonal + remainder split
-    _q(lambda spark, sf: temporal.stl_decompose(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.stl_decompose(load_table(spark, sf, "events")),
     temporal.STL_DECOMPOSE_SQL,
 )
 register(
     "events_retention_cohorts",
-    _q(lambda spark, sf: temporal.retention_cohorts(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.retention_cohorts(load_table(spark, sf, "events")),
     temporal.RETENTION_COHORTS_SQL,
 )
 register(
     "events_signup_funnel",
-    _q(lambda spark, sf: temporal.signup_purchase_funnel(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.signup_purchase_funnel(load_table(spark, sf, "events")),
     temporal.SIGNUP_FUNNEL_SQL,
 )
 register(
     "orders_price_ranks",
-    _q(lambda spark, sf: analytics.order_price_ranks(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.order_price_ranks(load_table(spark, sf, "orders")),
     analytics.ORDER_PRICE_RANKS_SQL,
 )
 register(
     "revenue_geo_rollup",
-    _q(
-        lambda spark, sf: analytics.revenue_geo_rollup(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "nation"),
-            load_table(spark, sf, "region"),
-        )
+    lambda spark, sf: analytics.revenue_geo_rollup(
+        load_table(spark, sf, "lineitem"),
+        load_table(spark, sf, "supplier"),
+        load_table(spark, sf, "nation"),
+        load_table(spark, sf, "region"),
     ),
     analytics.REVENUE_GEO_ROLLUP_SQL,
 )
 register(
     "orders_customer_rfm",
-    _q(lambda spark, sf: analytics.customer_rfm(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.customer_rfm(load_table(spark, sf, "orders")),
     analytics.CUSTOMER_RFM_SQL,
 )
 register(
     "orders_ltv_deciles",
-    _q(lambda spark, sf: analytics.customer_ltv_deciles(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.customer_ltv_deciles(load_table(spark, sf, "orders")),
     analytics.CUSTOMER_LTV_DECILES_SQL,
 )
 register(
     "events_type_transitions",
-    _q(lambda spark, sf: temporal.type_transition_matrix(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.type_transition_matrix(load_table(spark, sf, "events")),
     temporal.TYPE_TRANSITION_SQL,
 )
 register(
     "events_interarrival_stats",
-    _q(lambda spark, sf: temporal.interarrival_stats(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.interarrival_stats(load_table(spark, sf, "events")),
     temporal.INTERARRIVAL_STATS_SQL,
 )
 register(
     "events_value_anomalies",
-    _q(lambda spark, sf: analytics.value_anomalies(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.value_anomalies(load_table(spark, sf, "events")),
     analytics.VALUE_ANOMALIES_SQL,
 )
 register(
     "events_value_histogram",
-    _q(lambda spark, sf: analytics.value_histogram(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.value_histogram(load_table(spark, sf, "events")),
     analytics.VALUE_HISTOGRAM_SQL,
 )
 register(
     "events_props_json_stats",
-    _q(lambda spark, sf: temporal.props_json_stats(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.props_json_stats(load_table(spark, sf, "events")),
     temporal.PROPS_JSON_SQL,
 )
 register(
     "events_session_windows",
-    _q(lambda spark, sf: temporal.session_window_stats(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.session_window_stats(load_table(spark, sf, "events")),
     temporal.SESSION_WINDOW_SQL,
 )
 register(
     "events_user_sessions",
-    _q(lambda spark, sf: analytics.user_sessions(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.user_sessions(load_table(spark, sf, "events")),
     analytics.USER_SESSIONS_SQL,
 )
 register(
     "orders_top_per_customer",
-    _q(lambda spark, sf: analytics.top_orders_per_customer(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.top_orders_per_customer(load_table(spark, sf, "orders")),
     analytics.TOP_ORDERS_SQL,
 )
 register(
     "orders_trailing_revenue_7d",
-    _q(lambda spark, sf: analytics.trailing_revenue_7d(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.trailing_revenue_7d(load_table(spark, sf, "orders")),
     analytics.TRAILING_REVENUE_SQL,
 )
 register(
     "events_salted_type_stats",
-    _q(lambda spark, sf: analytics.salted_type_stats(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.salted_type_stats(load_table(spark, sf, "events")),
     analytics.SALTED_TYPE_STATS_SQL,
 )
 register(
     "events_rollup",
-    _q(lambda spark, sf: analytics.events_rollup(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.events_rollup(load_table(spark, sf, "events")),
     analytics.EVENTS_ROLLUP_SQL,
 )
 register(
     "events_value_quantiles",
-    _q(
-        lambda spark, sf: analytics.events_value_quantiles(
-            load_table(spark, sf, "events")
-        )
+    lambda spark, sf: analytics.events_value_quantiles(
+        load_table(spark, sf, "events")
     ),
     analytics.EVENTS_QUANTILES_SQL,
 )
 register(
     "events_approx_distinct",  # HLL sketch: engine-specific estimates → rows-only
-    _q(
-        lambda spark, sf: analytics.events_approx_distinct(
-            load_table(spark, sf, "events")
-        )
+    lambda spark, sf: analytics.events_approx_distinct(
+        load_table(spark, sf, "events")
     ),
 )
 
 # --- LLM data-pipeline extensions (BASELINE.json north_star) ---------------
 
-
-def _docs(spark, sf):
-    return load_table(spark, sf, "documents")
-
-
-def _emb(spark, sf):
-    return load_table(spark, sf, "embeddings")
-
-
-# Shared dedup-panel assets, persisted once per (session, sf_dir) — the
-# same memoized-silver-layer idiom as _STG_CACHE/_VALID_CACHE above.
-# Eight registered keys consume the exact n-gram Jaccard pair list (the
-# pair generator alone is ~2-3 s/build at sf0.1), three consume the
-# SimHash signatures, two the MinHash signature table: before this cache
-# the 17.7 s ensemble_components spent >80% re-deriving frames its
-# sibling keys had already computed in the same bench session. At
-# cluster scale these ARE the materialized dedup-index tables a 100 TB
-# pipeline would write once and join everywhere.
-_DEDUP_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-# Per-asset build locks (OPTIMIZATION r12): ann_recall_panel now
-# constructs its retrieval legs on concurrent driver threads, and two
-# legs can miss the same asset at once — without a lock both would
-# build it (correct but duplicated work). Double-checked per-key
-# locking keeps a cold build single-flight while never serializing
-# builds of DIFFERENT assets.
-_DEDUP_LOCKS: dict[tuple[int, str, str], "threading.Lock"] = {}
-_DEDUP_LOCKS_GUARD = threading.Lock()
-
-
-def _dedup_shared(spark, sf, name):
-    key = (id(spark.sparkContext), sf, name)
-    cached = _DEDUP_CACHE.get(key)
-    if cached is not None:
-        return cached
-    with _DEDUP_LOCKS_GUARD:
-        lock = _DEDUP_LOCKS.setdefault(key, threading.Lock())
-    with lock:
-        cached = _DEDUP_CACHE.get(key)
-        if cached is not None:
-            return cached
-        return _dedup_shared_build(spark, sf, name, key)
-
-
-def _dedup_shared_build(spark, sf, name, key):
-    docs = _docs(spark, sf)
-    if name == "sh3":  # the word-3-gram shingle index itself
-        df = llm_dedup.shingle_rows(docs, 3)
-    elif name == "sh5":  # the 5-gram index the decontamination legs share
-        df = llm_dedup.shingle_rows(docs, 5)
-    elif name == "jac_scores":  # unfiltered exact word-3-gram Jaccard pairs
-        df = llm_dedup.ngram_pair_scores(
-            docs, shingles=_dedup_shared(spark, sf, "sh3")
-        )
-    elif name == "con_scores":  # unfiltered containment (8-gram) pairs
-        df = llm_dedup.containment_scores(docs)
-    elif name == "sim_sig":  # SimHash signatures + band keys
-        df = llm_dedup.simhash(docs)
-    elif name == "mh_sig":  # 64 minhashes + exact shingle set per doc
-        df = llm_dedup.minhash_sig_table(
-            docs, shingles=_dedup_shared(spark, sf, "sh3")
-        )
-    elif name == "components":  # Jaccard near-dup connected components
-        df = llm_dedup.neardup_components(
-            docs,
-            pairs=_dedup_shared(spark, sf, "jac_scores").filter(
-                F.col("jaccard") >= 0.7
-            ),
-        )
-    elif name == "emb_pairs":  # exact cosine near-dup pairs (block-pair join)
-        df = llm_sim.embedding_neardup(_emb(spark, sf))
-    elif name == "srp_sigs":  # SRP-LSH banded signatures at the governor width
-        emb = _emb(spark, sf)
-        nb, bb = llm_sim._srp_dims(emb)
-        df = llm_sim.srp_buckets(emb, n_bits=nb, band_bits=bb)
-    elif name == "copurchase_edges":  # item-pagerank graph table
-        df = analytics.copurchase_edges(load_table(spark, sf, "lineitem"))
-    elif name == "kc_cells":  # exact one-round k-means cell assignment
-        df = llm_sim.kmeans_cells_exact(_emb(spark, sf))
-    elif name == "pq_codes":  # exact seeded PQ train round + assignment
-        # (VERDICT r6 #2: the train round is built ONCE, eagerly
-        # checkpointed inside pq_codes_exact; at cluster scale this is
-        # the PQ code table a pipeline writes once and ADC-scans from)
-        df = llm_sim.pq_codes_exact(_emb(spark, sf), checkpoint=True)
-    elif name == "knn_ivf":  # IVF retrieval frame at registered params
-        # (VERDICT r9 #5: emb_knn_ivf and the recall panel previously
-        # each trained their own quantizer — the panel now injects this
-        # cached frame, the way pq_codes is injected)
-        df = llm_sim.knn_ivf(_emb(spark, sf))
-    elif name == "knn_ivfpq":  # IVF-PQ retrieval frame at registered params
-        df = llm_sim.knn_ivfpq(_emb(spark, sf))
-    elif name == "beam_pq_books":  # PQ codebooks for the compressed beam
-        # (VERDICT r11 #8: S·k = 128 rows — the codebook tensor a
-        # serving deployment trains once and ships to every searcher)
-        df = llm_sim.beam_pq_books(_emb(spark, sf))
-    elif name == "beam_pq_codes":  # 8-byte/vector packed PQ corpus codes
-        # (the compressed index the ADC traversal reads instead of the
-        # full float vectors — built against the cached codebooks)
-        emb = _emb(spark, sf)
-        df = llm_sim.pq_assign_packed(
-            emb.filter(F.col("vec_id") >= llm_sim.NSW_N_QUERIES),
-            llm_sim._books_tensor(_dedup_shared(spark, sf, "beam_pq_books")),
-        ).localCheckpoint(eager=True)
-    elif name == "nsw_graph":  # symmetrized kNN graph (the graph-ANN index)
-        # NSW_N_QUERIES, not a literal (ADVICE r10): the cutoff MUST
-        # track knn_graph_beam's default or the cached graph silently
-        # includes query vectors / drops corpus vectors.
-        emb = _emb(spark, sf)
-        df = llm_sim._knn_graph(
-            emb.filter(F.col("vec_id") >= llm_sim.NSW_N_QUERIES)
-        ).localCheckpoint(eager=True)
-    elif name == "cov_mat":  # checkpointed full covariance matrix (d² rows)
-        df = (
-            llm_sim._cov_full_matrix(_emb(spark, sf))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-    elif name == "winnow_fp":  # winnowing-selected fingerprint frame
-        df = llm_text._winnow_selected(
-            docs, llm_text.WINNOW_K, llm_text.WINNOW_W
-        )
-    else:  # pragma: no cover
-        raise KeyError(name)
-    df = df.persist()
-    _DEDUP_CACHE[key] = df
-    return df
-
-
 register(
     "docs_exact_dedup",
-    _q(lambda spark, sf: llm_dedup.exact_dedup(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.exact_dedup(_docs(spark, sf)),
     llm_dedup.EXACT_DEDUP_SQL,
 )
 register(
     "docs_neardup_ngram",
-    _q(
-        lambda spark, sf: llm_dedup.neardup_ngram(
-            _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
-        )
+    lambda spark, sf: llm_dedup.neardup_ngram(
+        _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
     ),
     llm_dedup.NEARDUP_NGRAM_SQL,
 )
 register(
     "docs_neardup_components",
-    _q(lambda spark, sf: _dedup_shared(spark, sf, "components")),
+    lambda spark, sf: _dedup_shared(spark, sf, "components"),
     llm_dedup.NEARDUP_COMPONENTS_SQL,
 )
 register(
     "docs_neardup_minhash",  # md5 hash family → bands + verify fully oracled
-    _q(
-        lambda spark, sf: llm_dedup.neardup_minhash(
-            _docs(spark, sf), sig=_dedup_shared(spark, sf, "mh_sig")
-        )
+    lambda spark, sf: llm_dedup.neardup_minhash(
+        _docs(spark, sf), sig=_dedup_shared(spark, sf, "mh_sig")
     ),
     llm_dedup.NEARDUP_MINHASH_SQL,
 )
 register(
     "docs_lsh_s_curve",  # theoretical vs observed band-candidate recall curve
-    _q(
-        lambda spark, sf: llm_dedup.lsh_s_curve(
-            _docs(spark, sf),
-            scores=_dedup_shared(spark, sf, "jac_scores"),
-            sig=_dedup_shared(spark, sf, "mh_sig"),
-        )
+    lambda spark, sf: llm_dedup.lsh_s_curve(
+        _docs(spark, sf),
+        scores=_dedup_shared(spark, sf, "jac_scores"),
+        sig=_dedup_shared(spark, sf, "mh_sig"),
     ),
     llm_dedup.LSH_S_CURVE_SQL,
 )
 register(
     "docs_fuzzy_decontamination",  # banded MinHash train×eval leakage scan
-    _q(
-        lambda spark, sf: llm_dedup.fuzzy_decontamination(
-            _docs(spark, sf), sig=_dedup_shared(spark, sf, "mh_sig")
-        )
+    lambda spark, sf: llm_dedup.fuzzy_decontamination(
+        _docs(spark, sf), sig=_dedup_shared(spark, sf, "mh_sig")
     ),
     llm_dedup._fuzzy_decontamination_sql(),
 )
 register(
     "docs_simhash",  # md5-prefix token hash → signatures are SQL-reproducible
-    _q(lambda spark, sf: llm_dedup.simhash_long(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.simhash_long(_docs(spark, sf)),
     llm_dedup.SIMHASH_LONG_SQL,
 )
 register(
     "docs_text_stats",
-    _q(lambda spark, sf: llm_text.text_stats(_docs(spark, sf))),
+    lambda spark, sf: llm_text.text_stats(_docs(spark, sf)),
     llm_text.TEXT_STATS_SQL,
 )
 register(
     "docs_token_count_bpe",
-    _q(lambda spark, sf: llm_text.token_count_bpe(_docs(spark, sf))),
+    lambda spark, sf: llm_text.token_count_bpe(_docs(spark, sf)),
     llm_text.TOKEN_COUNT_BPE_SQL,
 )
 register(
     "docs_lang_id",
-    _q(lambda spark, sf: llm_text.lang_id(_docs(spark, sf))),
+    lambda spark, sf: llm_text.lang_id(_docs(spark, sf)),
     llm_text.LANG_ID_SQL,
 )
 register(
     "docs_fingerprint",
-    _q(lambda spark, sf: llm_text.fingerprint(_docs(spark, sf))),
+    lambda spark, sf: llm_text.fingerprint(_docs(spark, sf)),
     llm_text.FINGERPRINT_SQL,
 )
 register(
     "docs_corpus_composition",
-    _q(lambda spark, sf: llm_text.corpus_composition(_docs(spark, sf))),
+    lambda spark, sf: llm_text.corpus_composition(_docs(spark, sf)),
     llm_text.CORPUS_COMPOSITION_SQL,
 )
 register(
     "docs_bigram_lm_counts",
-    _q(lambda spark, sf: llm_text.bigram_lm_counts(_docs(spark, sf))),
+    lambda spark, sf: llm_text.bigram_lm_counts(_docs(spark, sf)),
     llm_text.BIGRAM_LM_SQL,
 )
 register(
     "docs_token_setops",
-    _q(lambda spark, sf: llm_text.token_setops(_docs(spark, sf))),
+    lambda spark, sf: llm_text.token_setops(_docs(spark, sf)),
     llm_text.TOKEN_SETOPS_SQL,
 )
 register(
     "docs_tfidf_top_terms",
-    _q(lambda spark, sf: llm_text.tfidf_top_terms(_docs(spark, sf))),
+    lambda spark, sf: llm_text.tfidf_top_terms(_docs(spark, sf)),
     llm_text.TFIDF_TOP_TERMS_SQL,
 )
 register(
     "docs_split_assign",
-    _q(lambda spark, sf: llm_cur.split_assign(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.split_assign(_docs(spark, sf)),
     llm_cur.SPLIT_ASSIGN_SQL,
 )
 register(
     "docs_mixture_weights",
-    _q(lambda spark, sf: llm_cur.mixture_weights(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.mixture_weights(_docs(spark, sf)),
     llm_cur.MIXTURE_WEIGHTS_SQL,
 )
 register(
     "docs_inverted_index",
-    _q(lambda spark, sf: llm_cur.inverted_index(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.inverted_index(_docs(spark, sf)),
     llm_cur.INVERTED_INDEX_SQL,
 )
 register(
     "docs_quality_filter",
-    _q(lambda spark, sf: llm_cur.quality_filter(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.quality_filter(_docs(spark, sf)),
     llm_cur.QUALITY_FILTER_SQL,
 )
 register(
     "docs_decontamination",
-    _q(
-        lambda spark, sf: llm_cur.decontamination(
-            _docs(spark, sf), shingles=_dedup_shared(spark, sf, "sh5")
-        )
+    lambda spark, sf: llm_cur.decontamination(
+        _docs(spark, sf), shingles=_dedup_shared(spark, sf, "sh5")
     ),
     llm_cur.DECONTAMINATION_SQL,
 )
 register(
     "docs_pii_scrub",
-    _q(lambda spark, sf: llm_cur.pii_scrub(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.pii_scrub(_docs(spark, sf)),
     llm_cur.PII_SCRUB_SQL,
 )
 register(
     "docs_stratified_sample",
-    _q(lambda spark, sf: llm_cur.stratified_sample(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.stratified_sample(_docs(spark, sf)),
     llm_cur.STRATIFIED_SAMPLE_SQL,
 )
 register(
     "docs_repetition_stats",
-    _q(lambda spark, sf: llm_cur.repetition_stats(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.repetition_stats(_docs(spark, sf)),
     llm_cur.REPETITION_STATS_SQL,
 )
 register(
     "emb_label_centroids",
-    _q(lambda spark, sf: llm_sim.label_centroids(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.label_centroids(_emb(spark, sf)),
     llm_sim.LABEL_CENTROIDS_SQL,
 )
 register(
     "emb_vector_norms",
-    _q(lambda spark, sf: llm_sim.vector_norms(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.vector_norms(_emb(spark, sf)),
     llm_sim.VECTOR_NORMS_SQL,
 )
 register(
     "emb_knn_bruteforce",
-    _q(lambda spark, sf: llm_sim.knn_bruteforce(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.knn_bruteforce(_emb(spark, sf)),
     llm_sim.KNN_BRUTEFORCE_SQL,
 )
 register(
     "emb_knn_ivf",  # approximate (probe subset) → rows-only
-    _q(lambda spark, sf: _dedup_shared(spark, sf, "knn_ivf")),
+    lambda spark, sf: _dedup_shared(spark, sf, "knn_ivf"),
 )
 register(
     "emb_neardup_cosine",
-    _q(lambda spark, sf: _dedup_shared(spark, sf, "emb_pairs")),
+    lambda spark, sf: _dedup_shared(spark, sf, "emb_pairs"),
     llm_sim.EMBEDDING_NEARDUP_SQL,
 )
 register(
     "emb_quantize_int8",
-    _q(lambda spark, sf: llm_sim.quantize_int8(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.quantize_int8(_emb(spark, sf)),
     llm_sim.QUANTIZE_INT8_SQL,
 )
 register(
     "emb_semantic_neardup_enriched",
-    _q(
-        lambda spark, sf: llm_sim.semantic_neardup_enriched(
-            _emb(spark, sf), _docs(spark, sf),
-            pairs=_dedup_shared(spark, sf, "emb_pairs"),
-        )
+    lambda spark, sf: llm_sim.semantic_neardup_enriched(
+        _emb(spark, sf), _docs(spark, sf),
+        pairs=_dedup_shared(spark, sf, "emb_pairs"),
     ),
     llm_sim.SEMANTIC_NEARDUP_ENRICHED_SQL,
 )
 register(
     "emb_neardup_cosine_fast",  # BLAS block product: last-ulp vs SQL → rows-only
-    _q(lambda spark, sf: llm_sim.embedding_neardup_fast(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.embedding_neardup_fast(_emb(spark, sf)),
 )
 register(
     "multimodal_extract",
-    _q(lambda spark, sf: llm_mm.multimodal_extract(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.multimodal_extract(_docs(spark, sf)),
     llm_mm.MULTIMODAL_EXTRACT_SQL,
 )
 register(
     # REAL pixels since round 8 (VERDICT r7 #4): decode via the PNG
     # codec, 2x2 integer box-average — byte-cycling stand-in retired
     "multimodal_resize",
-    _q(lambda spark, sf: llm_mm.resize_media(llm_mm.docs_as_png(_docs(spark, sf)))),
+    lambda spark, sf: llm_mm.resize_media(llm_mm.docs_as_png(_docs(spark, sf))),
     llm_mm.MEDIA_RESIZE_SQL,
 )
 register(
     # REAL pixels since round 8 (VERDICT r7 #4): decoded scanline
     # groups as frames — fixed-256-byte payload slicing retired
     "multimodal_frame_sample",
-    _q(lambda spark, sf: llm_mm.sample_frames(llm_mm.docs_as_png(_docs(spark, sf)))),
+    lambda spark, sf: llm_mm.sample_frames(llm_mm.docs_as_png(_docs(spark, sf))),
     llm_mm.FRAME_SAMPLE_SQL,
 )
 register(
@@ -1072,113 +952,107 @@ register(
     # NEW this round → round-8 driver window (round 7's 50 slots are
     # reserved for the verification-debt rotation).
     "multimodal_png_roundtrip",
-    _q(lambda spark, sf: llm_mm.png_roundtrip_features(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.png_roundtrip_features(_docs(spark, sf)),
     llm_mm.PNG_ROUNDTRIP_SQL,
 )
 register(
     "multimodal_png_resize",  # real pixel resampling: decode + 4x4 box average
-    _q(lambda spark, sf: llm_mm.png_resize(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.png_resize(_docs(spark, sf)),
     llm_mm.PNG_RESIZE_SQL,
 )
 register(
     "multimodal_luma_histogram",  # decoded-pixel 16-bin luminance histogram + extrema
-    _q(lambda spark, sf: llm_mm.png_luma_histogram(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.png_luma_histogram(_docs(spark, sf)),
     llm_mm.LUMA_HISTOGRAM_SQL,
 )
 register(
     "multimodal_ahash_neardup",  # 64-bit average-hash + banded hamming pairs
-    _q(lambda spark, sf: llm_mm.media_ahash_neardup(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.media_ahash_neardup(_docs(spark, sf)),
     llm_mm.MEDIA_AHASH_NEARDUP_SQL,
 )
 register(
     "docs_lexsem_agreement",  # lexical vs embedding near-dup cross-modality cut
-    _q(
-        lambda spark, sf: llm_dedup.lexical_semantic_agreement(
-            _dedup_shared(spark, sf, "jac_scores"),
-            _dedup_shared(spark, sf, "emb_pairs"),
-        )
+    lambda spark, sf: llm_dedup.lexical_semantic_agreement(
+        _dedup_shared(spark, sf, "jac_scores"),
+        _dedup_shared(spark, sf, "emb_pairs"),
     ),
     llm_dedup.LEXSEM_AGREEMENT_SQL,
 )
 register(
     "docs_cdc_chunk_dedup",  # content-defined chunking: shift-invariant dedup
-    _q(lambda spark, sf: llm_dedup.cdc_chunk_dedup(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.cdc_chunk_dedup(_docs(spark, sf)),
     llm_dedup.CDC_CHUNK_DEDUP_SQL,
 )
 register(
     "docs_classifier_calibration",  # reliability diagram: cls_score vs Gopher
-    _q(lambda spark, sf: llm_cur.classifier_calibration(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.classifier_calibration(_docs(spark, sf)),
     llm_cur.CLASSIFIER_CALIBRATION_SQL,
 )
 register(
     "docs_term_burstiness",  # Katz burstiness: VMR of per-doc term counts
-    _q(lambda spark, sf: llm_text.term_burstiness(_docs(spark, sf))),
+    lambda spark, sf: llm_text.term_burstiness(_docs(spark, sf)),
     llm_text.TERM_BURSTINESS_SQL,
 )
 register(
     "docs_good_turing",  # count-of-counts smoothing + unseen-mass estimate
-    _q(lambda spark, sf: llm_text.good_turing(_docs(spark, sf))),
+    lambda spark, sf: llm_text.good_turing(_docs(spark, sf)),
     llm_text.GOOD_TURING_SQL,
 )
 register(
     "docs_vocab_coverage",  # coverage / OOV-rate curve vs vocab size
-    _q(lambda spark, sf: llm_text.vocab_coverage(_docs(spark, sf))),
+    lambda spark, sf: llm_text.vocab_coverage(_docs(spark, sf)),
     llm_text.VOCAB_COVERAGE_SQL,
 )
 register(
     "multimodal_pcm_stats",  # int16-PCM DSP (RMS/ZCR/peak) over binary payloads
-    _q(lambda spark, sf: llm_mm.pcm_stats(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.pcm_stats(_docs(spark, sf)),
     llm_mm.PCM_STATS_SQL,
 )
 
 register(
     "emb_neardup_lsh",  # SRP-LSH with md5 Box-Muller hyperplanes → fully oracled
-    _q(
-        lambda spark, sf: llm_sim.embedding_neardup_lsh(
-            _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
-        )
+    lambda spark, sf: llm_sim.embedding_neardup_lsh(
+        _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
     ),
     llm_sim.NEARDUP_LSH_SQL,
 )
 register(
     "emb_kmeans_cells",  # exact seeded train round (VERDICT r5 #5 upgrade);
     # the multi-round Arrow trainer stays the knn_ivf production path
-    _q(lambda spark, sf: _dedup_shared(spark, sf, "kc_cells")),
+    lambda spark, sf: _dedup_shared(spark, sf, "kc_cells"),
     llm_sim.KMEANS_CELLS_EXACT_SQL,
 )
 register(
     "docs_pack_sequences",
-    _q(lambda spark, sf: llm_cur.pack_sequences(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.pack_sequences(_docs(spark, sf)),
     llm_cur.PACK_SEQUENCES_SQL,
 )
 register(
     "docs_bigram_logprob",
-    _q(lambda spark, sf: llm_text.doc_bigram_logprob(_docs(spark, sf))),
+    lambda spark, sf: llm_text.doc_bigram_logprob(_docs(spark, sf)),
     llm_text.DOC_BIGRAM_LOGPROB_SQL,
 )
 register(
     "emb_pq_codes",  # exact seeded train round (VERDICT r5 #5 upgrade);
     # iterative pq_codebooks training stays the knn_ivfpq production path
-    _q(lambda spark, sf: _dedup_shared(spark, sf, "pq_codes")),
+    lambda spark, sf: _dedup_shared(spark, sf, "pq_codes"),
     llm_sim.PQ_CODES_EXACT_SQL,
 )
 register(
     "events_hopping_windows",
-    _q(lambda spark, sf: temporal.hopping_window_counts(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.hopping_window_counts(load_table(spark, sf, "events")),
     temporal.HOPPING_WINDOW_SQL,
 )
 register(
     "docs_dedup_keeper",
-    _q(
-        lambda spark, sf: llm_dedup.dedup_keeper(
-            _docs(spark, sf), components=_dedup_shared(spark, sf, "components")
-        )
+    lambda spark, sf: llm_dedup.dedup_keeper(
+        _docs(spark, sf), components=_dedup_shared(spark, sf, "components")
     ),
     llm_dedup.DEDUP_KEEPER_SQL,
 )
 register(
     "events_heavy_hitters",
-    _q(lambda spark, sf: analytics.heavy_hitters(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.heavy_hitters(load_table(spark, sf, "events")),
     analytics.HEAVY_HITTERS_SQL,
 )
 
@@ -1268,35 +1142,33 @@ _DRIVER_WINDOW = [
 ]
 register(
     "emb_knn_ivfpq",  # IVF cells + PQ/ADC scoring: doubly approximate → rows-only
-    _q(lambda spark, sf: _dedup_shared(spark, sf, "knn_ivfpq")),
+    lambda spark, sf: _dedup_shared(spark, sf, "knn_ivfpq"),
 )
 register(
     "emb_label_purity",  # kNN label-consistency retrieval metric
-    _q(lambda spark, sf: llm_sim.label_purity(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.label_purity(_emb(spark, sf)),
     llm_sim.LABEL_PURITY_SQL,
 )
 register(
     "emb_prefix_truncate",  # long (vec_id, pos, value) — arrays crash driver canon
-    _q(lambda spark, sf: llm_sim.prefix_truncate_long(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.prefix_truncate_long(_emb(spark, sf)),
     llm_sim.PREFIX_TRUNCATE_LONG_SQL,
 )
 register(
     "emb_semantic_dedup_keeper",
-    _q(
-        lambda spark, sf: llm_sim.semantic_dedup_keeper(
-            _emb(spark, sf), pairs=_dedup_shared(spark, sf, "emb_pairs")
-        )
+    lambda spark, sf: llm_sim.semantic_dedup_keeper(
+        _emb(spark, sf), pairs=_dedup_shared(spark, sf, "emb_pairs")
     ),
     llm_sim.SEMANTIC_DEDUP_KEEPER_SQL,
 )
 register(
     "events_grouping_sets",
-    _q(lambda spark, sf: temporal.daily_type_grouping_sets(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.daily_type_grouping_sets(load_table(spark, sf, "events")),
     temporal.DAILY_TYPE_GROUPING_SETS_SQL,
 )
 register(
     "events_window_unique_users",
-    _q(lambda spark, sf: temporal.window_unique_users(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.window_unique_users(load_table(spark, sf, "events")),
     temporal.WINDOW_UNIQUE_USERS_SQL,
 )
 
@@ -1304,50 +1176,48 @@ register(
 
 register(
     "docs_chunking",  # overlapping token-window passages (map-only)
-    _q(lambda spark, sf: llm_cur.doc_chunks(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.doc_chunks(_docs(spark, sf)),
     llm_cur.DOC_CHUNKS_SQL,
 )
 register(
     "events_range_join",  # interval × point join via bin decomposition
-    _q(lambda spark, sf: temporal.hot_window_range_join(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.hot_window_range_join(load_table(spark, sf, "events")),
     temporal.HOT_WINDOW_RANGE_JOIN_SQL,
 )
 register(
     "emb_dim_stats",  # per-dimension moments over exact integer microunits
-    _q(lambda spark, sf: llm_sim.dim_stats(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.dim_stats(_emb(spark, sf)),
     llm_sim.DIM_STATS_SQL,
 )
 register(
     "docs_curation_pipeline",  # quality -> dedup keeper -> split, composed
-    _q(lambda spark, sf: llm_cur.curation_pipeline(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.curation_pipeline(_docs(spark, sf)),
     llm_cur.CURATION_PIPELINE_SQL,
 )
 register(
     "docs_incremental_dedup",  # new batch vs ingested corpus, no rescan
-    _q(lambda spark, sf: llm_dedup.incremental_dedup(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.incremental_dedup(_docs(spark, sf)),
     llm_dedup.INCREMENTAL_DEDUP_SQL,
 )
 register(
     "emb_neardup_prefix",  # Matryoshka-prefix coarse filter + exact verify
-    _q(lambda spark, sf: llm_sim.embedding_neardup_prefix(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.embedding_neardup_prefix(_emb(spark, sf)),
     llm_sim.EMBEDDING_NEARDUP_PREFIX_SQL,
 )
 register(
     "docs_text_normalize",  # control-char strip + whitespace collapse
-    _q(lambda spark, sf: llm_text.text_normalize(_docs(spark, sf))),
+    lambda spark, sf: llm_text.text_normalize(_docs(spark, sf)),
     llm_text.TEXT_NORMALIZE_SQL,
 )
 register(
     "emb_whitening",  # per-dim standardization, long (vec_id, pos, value) shape
-    _q(lambda spark, sf: llm_sim.whiten_long(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.whiten_long(_emb(spark, sf)),
     llm_sim.WHITEN_LONG_SQL,
 )
 register(
     "docs_dedup_cluster_stats",  # duplication report over near-dup components
-    _q(
-        lambda spark, sf: llm_dedup.dedup_cluster_stats(
-            _docs(spark, sf), components=_dedup_shared(spark, sf, "components")
-        )
+    lambda spark, sf: llm_dedup.dedup_cluster_stats(
+        _docs(spark, sf), components=_dedup_shared(spark, sf, "components")
     ),
     llm_dedup.DEDUP_CLUSTER_STATS_SQL,
 )
@@ -1356,236 +1226,224 @@ register(
 
 register(
     "emb_ivf_cell_assign",  # exact ANN-path component: pinned-cell argmax
-    _q(lambda spark, sf: llm_sim.ivf_cell_assign(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.ivf_cell_assign(_emb(spark, sf)),
     llm_sim.IVF_CELL_ASSIGN_SQL,
 )
 register(
     "docs_vocab_topk",  # tokenizer-prep vocabulary head (agg + TakeOrdered)
-    _q(lambda spark, sf: llm_text.vocab_topk(_docs(spark, sf))),
+    lambda spark, sf: llm_text.vocab_topk(_docs(spark, sf)),
     llm_text.VOCAB_TOPK_SQL,
 )
 register(
     "events_funnel",  # sequential view->click->purchase conversion funnel
-    _q(lambda spark, sf: analytics.user_funnel(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.user_funnel(load_table(spark, sf, "events")),
     analytics.USER_FUNNEL_SQL,
 )
 register(
     "docs_vocab_entropy",  # corpus unigram entropy / hapax panel (one row)
-    _q(lambda spark, sf: llm_text.vocab_entropy(_docs(spark, sf))),
+    lambda spark, sf: llm_text.vocab_entropy(_docs(spark, sf)),
     llm_text.VOCAB_ENTROPY_SQL,
 )
 register(
     "docs_zipf_fit",  # ln(freq) ~ ln(rank) OLS over the vocab head
-    _q(lambda spark, sf: llm_text.zipf_fit(_docs(spark, sf))),
+    lambda spark, sf: llm_text.zipf_fit(_docs(spark, sf)),
     llm_text.ZIPF_FIT_SQL,
 )
 register(
     "events_cms_freq",  # count-min sketch, md5-hash family → oracle-exact
-    _q(lambda spark, sf: analytics.cms_user_freq(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.cms_user_freq(load_table(spark, sf, "events")),
     analytics.CMS_USER_FREQ_SQL,
 )
 register(
     "orders_price_percentiles",  # exact interpolated per-group quantiles
-    _q(lambda spark, sf: analytics.price_percentiles(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.price_percentiles(load_table(spark, sf, "orders")),
     analytics.PRICE_PERCENTILES_SQL,
 )
 register(
     "emb_mips_topk",  # max-inner-product retrieval (unnormalized scoring)
-    _q(lambda spark, sf: llm_sim.mips_topk(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.mips_topk(_emb(spark, sf)),
     llm_sim.MIPS_TOPK_SQL,
 )
 register(
     "docs_repeated_passages",  # cross-doc 8-gram boilerplate spans
-    _q(lambda spark, sf: llm_dedup.repeated_passages(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.repeated_passages(_docs(spark, sf)),
     llm_dedup.REPEATED_PASSAGES_SQL,
 )
 register(
     "docs_dup_span_coverage",  # per-doc maximal duplicated-span fraction
-    _q(lambda spark, sf: llm_dedup.dup_span_coverage(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.dup_span_coverage(_docs(spark, sf)),
     llm_dedup.DUP_SPAN_COVERAGE_SQL,
 )
 register(
     "docs_dup_span_removal",  # exact-substring dedup REWRITE: keeper survives, copies removed
-    _q(lambda spark, sf: llm_dedup.dup_span_removal(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.dup_span_removal(_docs(spark, sf)),
     llm_dedup.DUP_SPAN_REMOVAL_SQL,
 )
 register(
     "emb_covariance",  # exact-microunit dim covariance (PCA/whitening input)
-    _q(lambda spark, sf: llm_sim.dim_covariance(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.dim_covariance(_emb(spark, sf)),
     llm_sim.DIM_COVARIANCE_SQL,
 )
 register(
     "emb_pca_project",  # eigh on the bounded covariance → pure-map projection
-    _q(lambda spark, sf: llm_sim.pca_project(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.pca_project(_emb(spark, sf)),
 )
 register(
     "emb_power_iteration",  # PC1 by 12 rounded power steps — full oracle twin
-    _q(
-        lambda spark, sf: llm_sim.power_iteration(
-            _emb(spark, sf), mat=_dedup_shared(spark, sf, "cov_mat")
-        )
+    lambda spark, sf: llm_sim.power_iteration(
+        _emb(spark, sf), mat=_dedup_shared(spark, sf, "cov_mat")
     ),
     llm_sim.POWER_ITERATION_SQL,
 )
 register(
     "emb_linear_probe",  # in-engine ridge probe trained by unrolled GD
-    _q(lambda spark, sf: llm_sim.linear_probe_gd(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.linear_probe_gd(_emb(spark, sf)),
     llm_sim.LINEAR_PROBE_SQL,
 )
 register(
     "emb_mmd_labels",  # RBF-kernel MMD² two-sample matrix across labels
-    _q(lambda spark, sf: llm_sim.mmd_labels(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.mmd_labels(_emb(spark, sf)),
     llm_sim.MMD_LABELS_SQL,
 )
 register(
     "emb_pca_deflation",  # top-3 eigenpairs via deflation — full oracle twin
-    _q(
-        lambda spark, sf: llm_sim.pca_deflation(
-            _emb(spark, sf), mat=_dedup_shared(spark, sf, "cov_mat")
-        )
+    lambda spark, sf: llm_sim.pca_deflation(
+        _emb(spark, sf), mat=_dedup_shared(spark, sf, "cov_mat")
     ),
     llm_sim.PCA_DEFLATION_SQL,
 )
 register(
     "multimodal_dup_groups",  # level-0 binary dedup: checksum groups + keeper
-    _q(lambda spark, sf: llm_mm.media_dup_groups(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.media_dup_groups(_docs(spark, sf)),
     llm_mm.MEDIA_DUP_GROUPS_SQL,
 )
 register(
     "emb_triplet_mining",  # nearest positive + hard negative per anchor
-    _q(lambda spark, sf: llm_sim.triplet_mining(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.triplet_mining(_emb(spark, sf)),
     llm_sim.TRIPLET_MINING_SQL,
 )
 register(
     "docs_lang_source_chi2",  # corpus-bias chi-squared + Cramér's V
-    _q(lambda spark, sf: llm_text.lang_source_chi2(_docs(spark, sf))),
+    lambda spark, sf: llm_text.lang_source_chi2(_docs(spark, sf)),
     llm_text.LANG_SOURCE_CHI2_SQL,
 )
 register(
     "orders_market_basket",  # co-purchase pairs with support and lift
-    _q(
-        lambda spark, sf: analytics.market_basket_pairs(
-            load_table(spark, sf, "lineitem")
-        )
+    lambda spark, sf: analytics.market_basket_pairs(
+        load_table(spark, sf, "lineitem")
     ),
     analytics.MARKET_BASKET_SQL,
 )
 register(
     "events_hll_rollup",  # mergeable HLL distinct rollup (estimates engine-specific)
-    _q(lambda spark, sf: analytics.hll_rollup(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.hll_rollup(load_table(spark, sf, "events")),
 )
 register(
     "events_value_anomalies_mad",  # robust median/MAD outliers (exact percentiles)
-    _q(lambda spark, sf: analytics.value_anomalies_mad(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.value_anomalies_mad(load_table(spark, sf, "events")),
     analytics.VALUE_ANOMALIES_MAD_SQL,
 )
 register(
     "events_key_skew_stats",  # shuffle-key skew diagnostic (salt-or-not panel)
-    _q(lambda spark, sf: analytics.key_skew_stats(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.key_skew_stats(load_table(spark, sf, "events")),
     analytics.KEY_SKEW_STATS_SQL,
 )
 register(
     "events_dau_wau",  # rolling-distinct engagement via supported-window explode
-    _q(lambda spark, sf: temporal.dau_wau_stickiness(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.dau_wau_stickiness(load_table(spark, sf, "events")),
     temporal.DAU_WAU_SQL,
 )
 register(
     "docs_length_histogram",  # pow-2 token-length buckets + cumulative shares
-    _q(lambda spark, sf: llm_text.length_histogram(_docs(spark, sf))),
+    lambda spark, sf: llm_text.length_histogram(_docs(spark, sf)),
     llm_text.LENGTH_HISTOGRAM_SQL,
 )
 register(
     "emb_cell_purity",  # IVF partition quality: per-cell majority-label share
-    _q(lambda spark, sf: llm_sim.cell_purity(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.cell_purity(_emb(spark, sf)),
     llm_sim.CELL_PURITY_SQL,
 )
 register(
     "docs_quality_classifier",  # hashed-feature linear model scoring, JVM-side
-    _q(lambda spark, sf: llm_text.quality_classifier(_docs(spark, sf))),
+    lambda spark, sf: llm_text.quality_classifier(_docs(spark, sf)),
     llm_text.QUALITY_CLASSIFIER_SQL,
 )
 register(
     "docs_bpe_pair_counts",  # BPE trainer inner loop over the weighted vocab
-    _q(lambda spark, sf: llm_text.bpe_pair_counts(_docs(spark, sf))),
+    lambda spark, sf: llm_text.bpe_pair_counts(_docs(spark, sf)),
     llm_text.BPE_PAIR_COUNTS_SQL,
 )
 register(
     "docs_containment",  # asymmetric |A∩B|/min sub-document dedup pairs
-    _q(
-        lambda spark, sf: llm_dedup.containment_pairs(
-            _docs(spark, sf), scores=_dedup_shared(spark, sf, "con_scores")
-        )
+    lambda spark, sf: llm_dedup.containment_pairs(
+        _docs(spark, sf), scores=_dedup_shared(spark, sf, "con_scores")
     ),
     llm_dedup.CONTAINMENT_SQL,
 )
 register(
     "docs_snapshot_diff",  # corpus snapshot delta: added/removed/changed
-    _q(lambda spark, sf: llm_cur.snapshot_diff(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.snapshot_diff(_docs(spark, sf)),
     llm_cur.SNAPSHOT_DIFF_SQL,
 )
 register(
     "emb_kmeans_update",  # one exact Lloyd update from the pinned cells
-    _q(lambda spark, sf: llm_sim.kmeans_update(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.kmeans_update(_emb(spark, sf)),
     llm_sim.KMEANS_UPDATE_SQL,
 )
 register(
     "docs_ngram_novelty",  # first-occurrence novelty share per document
-    _q(lambda spark, sf: llm_dedup.ngram_novelty(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.ngram_novelty(_docs(spark, sf)),
     llm_dedup.NGRAM_NOVELTY_SQL,
 )
 register(
     "docs_bpe_merge_step",  # apply the learned top merge, recount pairs
-    _q(lambda spark, sf: llm_text.bpe_merge_step(_docs(spark, sf))),
+    lambda spark, sf: llm_text.bpe_merge_step(_docs(spark, sf)),
     llm_text.BPE_MERGE_STEP_SQL,
 )
 register(
     "docs_dedup_method_agreement",  # jaccard vs containment vs exact overlap
-    _q(
-        lambda spark, sf: llm_dedup.dedup_method_agreement(
-            _docs(spark, sf),
-            jac=llm_dedup.neardup_ngram(
-                _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
-            ),
-            con=llm_dedup.containment_pairs(
-                _docs(spark, sf), scores=_dedup_shared(spark, sf, "con_scores")
-            ),
-        )
+    lambda spark, sf: llm_dedup.dedup_method_agreement(
+        _docs(spark, sf),
+        jac=llm_dedup.neardup_ngram(
+            _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
+        ),
+        con=llm_dedup.containment_pairs(
+            _docs(spark, sf), scores=_dedup_shared(spark, sf, "con_scores")
+        ),
     ),
     llm_dedup.DEDUP_METHOD_AGREEMENT_SQL,
 )
 register(
     "docs_weighted_sample",  # deterministic A-Res weight-proportional sample
-    _q(lambda spark, sf: llm_cur.weighted_sample(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.weighted_sample(_docs(spark, sf)),
     llm_cur.WEIGHTED_SAMPLE_SQL,
 )
 register(
     "multimodal_slice_neardup",  # fixed-slice checksum fuzzy media dedup
-    _q(lambda spark, sf: llm_mm.media_slice_neardup(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.media_slice_neardup(_docs(spark, sf)),
     llm_mm.MEDIA_SLICE_NEARDUP_SQL,
 )
 register(
     "emb_ann_recall_panel",  # recall@k of IVF / IVF-PQ vs brute force
     # (VERDICT r9 #5: inject the cached retrieval frames instead of
     # re-training both index structures inside the panel)
-    _q(
-        # the graph legs go in as CALLABLES (OPTIMIZATION r12): their
-        # construction runs eager per-round jobs, and the panel overlaps
-        # the independent legs on driver threads instead of serializing
-        # ~10 s of query-sized stages (guide §2.6).
-        lambda spark, sf: llm_sim.ann_recall_panel(
+    # the graph legs go in as CALLABLES (OPTIMIZATION r12): their
+    # construction runs eager per-round jobs, and the panel overlaps
+    # the independent legs on driver threads instead of serializing
+    # ~10 s of query-sized stages (guide §2.6).
+    lambda spark, sf: llm_sim.ann_recall_panel(
+        _emb(spark, sf),
+        ivf=_dedup_shared(spark, sf, "knn_ivf"),
+        ivfpq=_dedup_shared(spark, sf, "knn_ivfpq"),
+        graph_beam=lambda: llm_sim.knn_graph_beam(
+            _emb(spark, sf), graph=_dedup_shared(spark, sf, "nsw_graph")
+        ),
+        graph_pq=lambda: llm_sim.knn_graph_beam_pq(
             _emb(spark, sf),
-            ivf=_dedup_shared(spark, sf, "knn_ivf"),
-            ivfpq=_dedup_shared(spark, sf, "knn_ivfpq"),
-            graph_beam=lambda: llm_sim.knn_graph_beam(
-                _emb(spark, sf), graph=_dedup_shared(spark, sf, "nsw_graph")
-            ),
-            graph_pq=lambda: llm_sim.knn_graph_beam_pq(
-                _emb(spark, sf),
-                graph=_dedup_shared(spark, sf, "nsw_graph"),
-                books=_dedup_shared(spark, sf, "beam_pq_books"),
-                codes=_dedup_shared(spark, sf, "beam_pq_codes"),
-            ),
-        )
+            graph=_dedup_shared(spark, sf, "nsw_graph"),
+            books=_dedup_shared(spark, sf, "beam_pq_books"),
+            codes=_dedup_shared(spark, sf, "beam_pq_codes"),
+        ),
     ),
 )
 register(
@@ -1593,10 +1451,8 @@ register(
     # symmetrized kNN graph (NSW-lite) — FULL unrolled oracle, unlike
     # the rows-only IVF/IVF-PQ keys — NEW round 10 → driver window
     "emb_knn_graph_beam",
-    _q(
-        lambda spark, sf: llm_sim.knn_graph_beam(
-            _emb(spark, sf), graph=_dedup_shared(spark, sf, "nsw_graph")
-        )
+    lambda spark, sf: llm_sim.knn_graph_beam(
+        _emb(spark, sf), graph=_dedup_shared(spark, sf, "nsw_graph")
     ),
     llm_sim.KNN_GRAPH_BEAM_SQL,
 )
@@ -1606,13 +1462,11 @@ register(
     # cutting the round budget 6 → 4 with the recall floor intact —
     # full unrolled oracle. NEW round 11 → driver window
     "emb_knn_graph_beam_layered",
-    _q(
-        lambda spark, sf: llm_sim.knn_graph_beam(
-            _emb(spark, sf),
-            rounds=llm_sim.NSW_LAYERED_ROUNDS,
-            graph=_dedup_shared(spark, sf, "nsw_graph"),
-            layered=True,
-        )
+    lambda spark, sf: llm_sim.knn_graph_beam(
+        _emb(spark, sf),
+        rounds=llm_sim.NSW_LAYERED_ROUNDS,
+        graph=_dedup_shared(spark, sf, "nsw_graph"),
+        layered=True,
     ),
     llm_sim.KNN_GRAPH_BEAM_LAYERED_SQL,
 )
@@ -1625,13 +1479,11 @@ register(
     # precedent); recall ≥ 0.9 vs brute force pinned in pytest and in
     # the graph_pq leg of emb_ann_recall_panel. NEW round 12
     "emb_knn_graph_beam_pq",
-    _q(
-        lambda spark, sf: llm_sim.knn_graph_beam_pq(
-            _emb(spark, sf),
-            graph=_dedup_shared(spark, sf, "nsw_graph"),
-            books=_dedup_shared(spark, sf, "beam_pq_books"),
-            codes=_dedup_shared(spark, sf, "beam_pq_codes"),
-        )
+    lambda spark, sf: llm_sim.knn_graph_beam_pq(
+        _emb(spark, sf),
+        graph=_dedup_shared(spark, sf, "nsw_graph"),
+        books=_dedup_shared(spark, sf, "beam_pq_books"),
+        codes=_dedup_shared(spark, sf, "beam_pq_codes"),
     ),
 )
 register(
@@ -1640,10 +1492,8 @@ register(
     # this builds it without the exact O(n^2) pass) — full unrolled
     # oracle. NEW round 10 → driver window
     "emb_nn_descent_graph",
-    _q(
-        lambda spark, sf: llm_sim.nn_descent_graph(
-            _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
-        )
+    lambda spark, sf: llm_sim.nn_descent_graph(
+        _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
     ),
     llm_sim.NN_DESCENT_GRAPH_SQL,
 )
@@ -1653,503 +1503,447 @@ register(
     # without re-forming the old pair space — full unrolled oracle.
     # NEW round 11 → driver window
     "emb_knn_graph_delta",
-    _q(
-        lambda spark, sf: llm_sim.knn_graph_delta(
-            _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
-        )
+    lambda spark, sf: llm_sim.knn_graph_delta(
+        _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
     ),
     llm_sim.KNN_GRAPH_DELTA_SQL,
 )
 register(
     "events_lateness_panel",  # watermark-sizing lateness histogram
-    _q(lambda spark, sf: temporal.lateness_panel(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.lateness_panel(load_table(spark, sf, "events")),
     temporal.LATENESS_PANEL_SQL,
 )
 register(
     "docs_tfidf_cosine_pairs",  # sparse inverted-index similarity join
-    _q(lambda spark, sf: llm_text.tfidf_cosine_pairs(_docs(spark, sf))),
+    lambda spark, sf: llm_text.tfidf_cosine_pairs(_docs(spark, sf)),
     llm_text.TFIDF_COSINE_PAIRS_SQL,
 )
 register(
     "docs_ensemble_components",  # components over jaccard ∪ containment ∪ simhash
-    _q(
-        lambda spark, sf: llm_dedup.ensemble_components(
-            _docs(spark, sf),
-            jac=llm_dedup.neardup_ngram(
-                _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
-            ),
-            con=llm_dedup.containment_pairs(
-                _docs(spark, sf), scores=_dedup_shared(spark, sf, "con_scores")
-            ),
-            sim=llm_dedup.simhash_pairs(
-                _docs(spark, sf), sig=_dedup_shared(spark, sf, "sim_sig")
-            ),
-            # warm-start from the cached Jaccard components: the union
-            # graph's fixpoint is unchanged, the jaccard rounds are skipped
-            init_labels=_dedup_shared(spark, sf, "components").select(
-                F.col("doc_id").alias("node_id"), "component"
-            ),
-        )
+    lambda spark, sf: llm_dedup.ensemble_components(
+        _docs(spark, sf),
+        jac=llm_dedup.neardup_ngram(
+            _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
+        ),
+        con=llm_dedup.containment_pairs(
+            _docs(spark, sf), scores=_dedup_shared(spark, sf, "con_scores")
+        ),
+        sim=llm_dedup.simhash_pairs(
+            _docs(spark, sf), sig=_dedup_shared(spark, sf, "sim_sig")
+        ),
+        # warm-start from the cached Jaccard components: the union
+        # graph's fixpoint is unchanged, the jaccard rounds are skipped
+        init_labels=_dedup_shared(spark, sf, "components").select(
+            F.col("doc_id").alias("node_id"), "component"
+        ),
     ),
     llm_dedup.ENSEMBLE_COMPONENTS_SQL,
 )
 register(
     "orders_item_pagerank",  # exact integer PageRank over co-purchases
-    _q(
-        lambda spark, sf: analytics.item_pagerank(
-            load_table(spark, sf, "lineitem"),
-            edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
-        )
+    lambda spark, sf: analytics.item_pagerank(
+        load_table(spark, sf, "lineitem"),
+        edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
     ),
     analytics.ITEM_PAGERANK_SQL,
 )
 register(
     "docs_perplexity_buckets",  # CCNet-style LM-score decile triage
-    _q(lambda spark, sf: llm_text.perplexity_buckets(_docs(spark, sf))),
+    lambda spark, sf: llm_text.perplexity_buckets(_docs(spark, sf)),
     llm_text.PERPLEXITY_BUCKETS_SQL,
 )
 register(
     "docs_source_overlap",  # cross-source contamination matrix over near-dups
-    _q(
-        lambda spark, sf: llm_dedup.source_overlap(
-            _docs(spark, sf),
-            pairs=llm_dedup.neardup_ngram(
-                _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
-            ),
-        )
+    lambda spark, sf: llm_dedup.source_overlap(
+        _docs(spark, sf),
+        pairs=llm_dedup.neardup_ngram(
+            _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
+        ),
     ),
     llm_dedup.SOURCE_OVERLAP_SQL,
 )
 register(
     "docs_token_dup_inflation",  # dedup savings priced in tokens
-    _q(lambda spark, sf: llm_dedup.token_dup_inflation(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.token_dup_inflation(_docs(spark, sf)),
     llm_dedup.TOKEN_DUP_INFLATION_SQL,
 )
 register(
     "emb_label_centroid_sim",  # inter-label centroid cosine matrix
-    _q(lambda spark, sf: llm_sim.label_centroid_sim(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.label_centroid_sim(_emb(spark, sf)),
     llm_sim.LABEL_CENTROID_SIM_SQL,
 )
 register(
     "docs_dp_source_counts",  # Laplace-mechanism release, md5-deterministic
-    _q(lambda spark, sf: llm_cur.dp_source_counts(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.dp_source_counts(_docs(spark, sf)),
     llm_cur.DP_SOURCE_COUNTS_SQL,
 )
 register(
     "events_changepoint_scan",  # argmax mean-shift split day per type
-    _q(
-        lambda spark, sf: analytics.changepoint_scan(
-            load_table(spark, sf, "events")
-        )
+    lambda spark, sf: analytics.changepoint_scan(
+        load_table(spark, sf, "events")
     ),
     analytics.CHANGEPOINT_SCAN_SQL,
 )
 register(
     "emb_hamming_cosine_calibration",  # sign-code QA: cosine per hamming bucket
-    _q(lambda spark, sf: llm_sim.hamming_cosine_calibration(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.hamming_cosine_calibration(_emb(spark, sf)),
     llm_sim.HAMMING_COSINE_CALIBRATION_SQL,
 )
 register(
     "lineitem_leadtime_anova",  # one-way F across order priorities + eta²
-    _q(
-        lambda spark, sf: tx.leadtime_anova(
-            load_table(spark, sf, "lineitem"), load_table(spark, sf, "orders")
-        )
+    lambda spark, sf: tx.leadtime_anova(
+        load_table(spark, sf, "lineitem"), load_table(spark, sf, "orders")
     ),
     tx.LEADTIME_ANOVA_SQL,
 )
 register(
     "orders_promo_did",  # difference-in-differences on the promo family
-    _q(
-        lambda spark, sf: tx.promo_did(
-            load_table(spark, sf, "lineitem"), load_table(spark, sf, "part")
-        )
+    lambda spark, sf: tx.promo_did(
+        load_table(spark, sf, "lineitem"), load_table(spark, sf, "part")
     ),
     tx.PROMO_DID_SQL,
 )
 register(
     "orders_kaplan_meier",  # product-limit fulfilment-time survival curve
-    _q(
-        lambda spark, sf: tx.kaplan_meier(
-            load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
-        )
+    lambda spark, sf: tx.kaplan_meier(
+        load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
     ),
     tx.KAPLAN_MEIER_SQL,
 )
 register(
     "orders_duplicate_invoices",  # customer-blocked double-entry audit
-    _q(lambda spark, sf: tx.duplicate_invoices(load_table(spark, sf, "orders"))),
+    lambda spark, sf: tx.duplicate_invoices(load_table(spark, sf, "orders")),
     tx.DUPLICATE_INVOICES_SQL,
 )
 register(
     "supplier_concentration",  # per-part HHI single-sourcing risk
-    _q(
-        lambda spark, sf: tx.supplier_concentration(
-            load_table(spark, sf, "lineitem")
-        )
+    lambda spark, sf: tx.supplier_concentration(
+        load_table(spark, sf, "lineitem")
     ),
     tx.SUPPLIER_CONCENTRATION_SQL,
 )
 register(
     "emb_sign_codes",  # 1-bit sign quantization packed into two BIGINT halves
-    _q(lambda spark, sf: llm_sim.sign_codes(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.sign_codes(_emb(spark, sf)),
     llm_sim.SIGN_CODES_SQL,
 )
 register(
     "orders_backlog_aging",  # open-order aging buckets with value at risk
-    _q(lambda spark, sf: tx.backlog_aging(load_table(spark, sf, "orders"))),
+    lambda spark, sf: tx.backlog_aging(load_table(spark, sf, "orders")),
     tx.BACKLOG_AGING_SQL,
 )
 register(
     "orders_cohort_ltv",  # first-order-month cohort x months-since LTV matrix
-    _q(lambda spark, sf: tx.cohort_ltv(load_table(spark, sf, "orders"))),
+    lambda spark, sf: tx.cohort_ltv(load_table(spark, sf, "orders")),
     tx.COHORT_LTV_SQL,
 )
 register(
     "docs_tokenizer_fertility",  # subword-per-word budgeting panel per lang/source
-    _q(lambda spark, sf: llm_text.tokenizer_fertility(_docs(spark, sf))),
+    lambda spark, sf: llm_text.tokenizer_fertility(_docs(spark, sf)),
     llm_text.TOKENIZER_FERTILITY_SQL,
 )
 register(
     "docs_dedup_threshold_sweep",  # pair/doc counts at each candidate threshold
-    _q(
-        lambda spark, sf: llm_dedup.dedup_threshold_sweep(
-            _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
-        )
+    lambda spark, sf: llm_dedup.dedup_threshold_sweep(
+        _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
     ),
     llm_dedup.DEDUP_THRESHOLD_SWEEP_SQL,
 )
 register(
     "orders_revenue_trend",  # per-nation exact-decimal OLS monthly slope
-    _q(
-        lambda spark, sf: tx.revenue_trend(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "nation"),
-        )
+    lambda spark, sf: tx.revenue_trend(
+        load_table(spark, sf, "orders"),
+        load_table(spark, sf, "customer"),
+        load_table(spark, sf, "nation"),
     ),
     tx.REVENUE_TREND_SQL,
 )
 register(
     "docs_delete_propagation",  # right-to-be-forgotten purge accounting
-    _q(
-        lambda spark, sf: llm_cur.delete_propagation(
-            _docs(spark, sf), _emb(spark, sf)
-        )
+    lambda spark, sf: llm_cur.delete_propagation(
+        _docs(spark, sf), _emb(spark, sf)
     ),
     llm_cur.DELETE_PROPAGATION_SQL,
 )
 register(
     "events_kmv_distinct",  # oracle-exact mergeable bottom-k distinct sketch
-    _q(lambda spark, sf: analytics.kmv_distinct(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.kmv_distinct(load_table(spark, sf, "events")),
     analytics.KMV_DISTINCT_SQL,
 )
 register(
     "events_hll_manual",  # register-level oracle-exact HyperLogLog + merge
-    _q(lambda spark, sf: analytics.hll_manual(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.hll_manual(load_table(spark, sf, "events")),
     analytics.HLL_MANUAL_SQL,
 )
 register(
     "events_k_anonymity",  # QI-group re-identification audit + utility cost
-    _q(lambda spark, sf: analytics.k_anonymity(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.k_anonymity(load_table(spark, sf, "events")),
     analytics.K_ANONYMITY_SQL,
 )
 register(
     "emb_label_prototypes",  # per-label exemplars nearest the centroid
-    _q(lambda spark, sf: llm_sim.label_prototypes(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.label_prototypes(_emb(spark, sf)),
     llm_sim.LABEL_PROTOTYPES_SQL,
 )
 register(
     "docs_rrf_fusion",  # reciprocal-rank fusion of BM25 + TF-IDF lists
-    _q(lambda spark, sf: llm_text.rrf_fusion(_docs(spark, sf))),
+    lambda spark, sf: llm_text.rrf_fusion(_docs(spark, sf)),
     llm_text.RRF_FUSION_SQL,
 )
 register(
     "events_type_value_drift",  # two-window Welch-z retrain gate
-    _q(
-        lambda spark, sf: analytics.type_value_drift(
-            load_table(spark, sf, "events")
-        )
+    lambda spark, sf: analytics.type_value_drift(
+        load_table(spark, sf, "events")
     ),
     analytics.TYPE_VALUE_DRIFT_SQL,
 )
 register(
     "docs_bm25_scores",  # Okapi BM25 ranked retrieval, deterministic mid-df query
-    _q(lambda spark, sf: llm_text.bm25_scores(_docs(spark, sf))),
+    lambda spark, sf: llm_text.bm25_scores(_docs(spark, sf)),
     llm_text.BM25_SCORES_SQL,
 )
 register(
     "orders_kcore",  # iterative k-core peel, unrolled-CTE exact oracle
-    _q(
-        lambda spark, sf: analytics.kcore(
-            load_table(spark, sf, "lineitem"),
-            edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
-        )
+    lambda spark, sf: analytics.kcore(
+        load_table(spark, sf, "lineitem"),
+        edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
     ),
     analytics.KCORE_SQL,
 )
 register(
     "orders_link_prediction",  # CN / RA / Jaccard scores for absent edges
-    _q(
-        lambda spark, sf: analytics.link_prediction(
-            load_table(spark, sf, "lineitem"),
-            edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
-        )
+    lambda spark, sf: analytics.link_prediction(
+        load_table(spark, sf, "lineitem"),
+        edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
     ),
     analytics.LINK_PREDICTION_SQL,
 )
 register(
     "orders_graph_triangles",  # degree-capped triangle census + clustering coeff
-    _q(
-        lambda spark, sf: analytics.graph_triangles(
-            load_table(spark, sf, "lineitem"),
-            edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
-        )
+    lambda spark, sf: analytics.graph_triangles(
+        load_table(spark, sf, "lineitem"),
+        edges_od=_dedup_shared(spark, sf, "copurchase_edges"),
     ),
     analytics.GRAPH_TRIANGLES_SQL,
 )
 register(
     "docs_corpus_datasheet",  # the one-row dataset card
-    _q(lambda spark, sf: llm_cur.corpus_datasheet(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.corpus_datasheet(_docs(spark, sf)),
     llm_cur.CORPUS_DATASHEET_SQL,
 )
 register(
     "emb_label_outliers",  # distance-to-own-centroid z-score review queue
-    _q(lambda spark, sf: llm_sim.label_outlier_vectors(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.label_outlier_vectors(_emb(spark, sf)),
     llm_sim.LABEL_OUTLIER_VECTORS_SQL,
 )
 register(
     "emb_cosine_histogram",  # corpus geometry: the curve the threshold sits on
-    _q(lambda spark, sf: llm_sim.cosine_histogram(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.cosine_histogram(_emb(spark, sf)),
     llm_sim.COSINE_HISTOGRAM_SQL,
 )
 register(
     "events_type_effect_sizes",  # pairwise Cohen's d on value, exact moments
-    _q(lambda spark, sf: analytics.type_effect_sizes(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.type_effect_sizes(load_table(spark, sf, "events")),
     analytics.TYPE_EFFECT_SIZES_SQL,
 )
 register(
     "docs_heaps_fit",  # vocabulary-growth exponent over pow-2 prefixes
-    _q(lambda spark, sf: llm_text.heaps_fit(_docs(spark, sf))),
+    lambda spark, sf: llm_text.heaps_fit(_docs(spark, sf)),
     llm_text.HEAPS_FIT_SQL,
 )
 register(
     "emb_cell_balance",  # IVF probe-cost skew: per-cell load vs uniform
-    _q(lambda spark, sf: llm_sim.cell_balance(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.cell_balance(_emb(spark, sf)),
     llm_sim.CELL_BALANCE_SQL,
 )
 register(
     "docs_minhash_error_panel",  # sketch-vs-exact jaccard error, fully oracled
-    _q(
-        lambda spark, sf: llm_dedup.minhash_error_panel(
-            _docs(spark, sf),
-            exact=_dedup_shared(spark, sf, "jac_scores"),
-            sig=_dedup_shared(spark, sf, "mh_sig"),
-        )
+    lambda spark, sf: llm_dedup.minhash_error_panel(
+        _docs(spark, sf),
+        exact=_dedup_shared(spark, sf, "jac_scores"),
+        sig=_dedup_shared(spark, sf, "mh_sig"),
     ),
     llm_dedup.MINHASH_ERROR_PANEL_SQL,
 )
 register(
     "docs_shingle_df_stats",  # the join-size estimator that picks MAX_SHINGLE_DF
-    _q(
-        lambda spark, sf: llm_dedup.shingle_df_stats(
-            _docs(spark, sf), shingles=_dedup_shared(spark, sf, "sh3")
-        )
+    lambda spark, sf: llm_dedup.shingle_df_stats(
+        _docs(spark, sf), shingles=_dedup_shared(spark, sf, "sh3")
     ),
     llm_dedup.SHINGLE_DF_STATS_SQL,
 )
 register(
     "emb_exact_dup_vectors",  # level-0 vector dedup by microunit fingerprint
-    _q(lambda spark, sf: llm_sim.exact_dup_vectors(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.exact_dup_vectors(_emb(spark, sf)),
     llm_sim.EXACT_DUP_VECTORS_SQL,
 )
 register(
     "events_type_overlap",  # audience-overlap jaccard per type pair
-    _q(lambda spark, sf: analytics.type_audience_overlap(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.type_audience_overlap(load_table(spark, sf, "events")),
     analytics.TYPE_AUDIENCE_OVERLAP_SQL,
 )
 register(
     "supplier_lead_times",  # order->ship lead-time tail percentiles
-    _q(
-        lambda spark, sf: tx.supplier_lead_times(
-            *_t(spark, sf, "supplier", "orders", "lineitem")
-        )
+    lambda spark, sf: tx.supplier_lead_times(
+        *_t(spark, sf, "supplier", "orders", "lineitem")
     ),
     tx.SUPPLIER_LEAD_TIMES_SQL,
 )
 register(
     "events_funnel_windowed",  # conversion bounded to a day per step
-    _q(lambda spark, sf: analytics.user_funnel_windowed(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.user_funnel_windowed(load_table(spark, sf, "events")),
     analytics.USER_FUNNEL_WINDOWED_SQL,
 )
 register(
     "events_seasonal_deviation",  # same-hour-of-day profile anomalies
-    _q(lambda spark, sf: temporal.seasonal_deviation(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.seasonal_deviation(load_table(spark, sf, "events")),
     temporal.SEASONAL_DEVIATION_SQL,
 )
 register(
     "emb_norm_stats",  # pre-indexing QA: is the corpus unit-normalized?
-    _q(lambda spark, sf: llm_sim.norm_stats(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.norm_stats(_emb(spark, sf)),
     llm_sim.NORM_STATS_SQL,
 )
 register(
     "docs_curation_pipeline_v2",  # classifier + dup-share gates -> keeper -> split
-    _q(lambda spark, sf: llm_cur.curation_pipeline_v2(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.curation_pipeline_v2(_docs(spark, sf)),
     llm_cur.CURATION_PIPELINE_V2_SQL,
 )
 register(
     "emb_incremental_topk",  # merge cached old-corpus top-k with new-batch scores
-    _q(lambda spark, sf: llm_sim.incremental_topk(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.incremental_topk(_emb(spark, sf)),
     llm_sim.INCREMENTAL_TOPK_SQL,
 )
 register(
     "docs_sorted_neighborhood",  # blocked SNM: sort-window candidates + exact verify
-    _q(lambda spark, sf: llm_dedup.sorted_neighborhood(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.sorted_neighborhood(_docs(spark, sf)),
     llm_dedup.SORTED_NEIGHBORHOOD_SQL,
 )
 register(
     "events_bloom_panel",  # bloom build + probe: fill, expected vs measured FPR
-    _q(lambda spark, sf: analytics.bloom_membership_panel(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.bloom_membership_panel(load_table(spark, sf, "events")),
     analytics.BLOOM_PANEL_SQL,
 )
 register(
     "docs_dedup_provenance",  # keeper -> removed-ids audit export
-    _q(lambda spark, sf: llm_dedup.dedup_provenance(_docs(spark, sf))),
+    lambda spark, sf: llm_dedup.dedup_provenance(_docs(spark, sf)),
     llm_dedup.DEDUP_PROVENANCE_SQL,
 )
 register(
     "docs_chunk_dup_rate",  # per-doc sub-document duplication share
-    _q(lambda spark, sf: llm_cur.chunk_dup_rate(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.chunk_dup_rate(_docs(spark, sf)),
     llm_cur.CHUNK_DUP_RATE_SQL,
 )
 register(
     "events_rate_bursts",  # trailing-hour rate-spike detector (RANGE frame)
-    _q(lambda spark, sf: temporal.rate_bursts(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.rate_bursts(load_table(spark, sf, "events")),
     temporal.RATE_BURSTS_SQL,
 )
 register(
     "docs_langid_confusion",  # row-normalized confusion matrix for lang_id
-    _q(lambda spark, sf: llm_text.langid_confusion(_docs(spark, sf))),
+    lambda spark, sf: llm_text.langid_confusion(_docs(spark, sf)),
     llm_text.LANGID_CONFUSION_SQL,
 )
 register(
     "orders_abc_analysis",  # Pareto cut over catalog-sized running share
-    _q(lambda spark, sf: tx.abc_analysis(*_t(spark, sf, "part", "lineitem"))),
+    lambda spark, sf: tx.abc_analysis(*_t(spark, sf, "part", "lineitem")),
     tx.ABC_ANALYSIS_SQL,
 )
 register(
     "docs_simhash_pairs",  # banded candidates + exact hamming verify
-    _q(
-        lambda spark, sf: llm_dedup.simhash_pairs(
-            _docs(spark, sf), sig=_dedup_shared(spark, sf, "sim_sig")
-        )
+    lambda spark, sf: llm_dedup.simhash_pairs(
+        _docs(spark, sf), sig=_dedup_shared(spark, sf, "sim_sig")
     ),
     llm_dedup.SIMHASH_PAIRS_SQL,
 )
 register(
     "supplier_reliability",  # late-rate ranking by Wilson lower bound
-    _q(
-        lambda spark, sf: tx.supplier_reliability(
-            *_t(spark, sf, "supplier", "orders", "lineitem")
-        )
+    lambda spark, sf: tx.supplier_reliability(
+        *_t(spark, sf, "supplier", "orders", "lineitem")
     ),
     tx.SUPPLIER_RELIABILITY_SQL,
 )
 register(
     "orders_theilsen_trend",  # robust (median-of-slopes) twin of the OLS trend
-    _q(
-        lambda spark, sf: tx.theilsen_trend(
-            *_t(spark, sf, "orders", "customer", "nation")
-        )
+    lambda spark, sf: tx.theilsen_trend(
+        *_t(spark, sf, "orders", "customer", "nation")
     ),
     tx.THEILSEN_TREND_SQL,
 )
 register(
     "orders_benford_digits",  # first-digit forensic audit vs Benford literals
-    _q(lambda spark, sf: tx.benford_digits(load_table(spark, sf, "orders"))),
+    lambda spark, sf: tx.benford_digits(load_table(spark, sf, "orders")),
     tx.BENFORD_DIGITS_SQL,
 )
 register(
     "orders_revenue_gini",  # Gini + top-decile share via exact_row_number
-    _q(lambda spark, sf: tx.revenue_gini(load_table(spark, sf, "orders"))),
+    lambda spark, sf: tx.revenue_gini(load_table(spark, sf, "orders")),
     tx.REVENUE_GINI_SQL,
 )
 register(
     "part_pareto_front",  # 2-D skyline (price vs size), sort-based
-    _q(lambda spark, sf: tx.part_pareto_front(load_table(spark, sf, "part"))),
+    lambda spark, sf: tx.part_pareto_front(load_table(spark, sf, "part")),
     tx.PART_PARETO_FRONT_SQL,
 )
 register(
     "orders_item_similarity",  # item-item Jaccard top-k ("also bought")
-    _q(lambda spark, sf: analytics.item_similarity(load_table(spark, sf, "lineitem"))),
+    lambda spark, sf: analytics.item_similarity(load_table(spark, sf, "lineitem")),
     analytics.ITEM_SIMILARITY_SQL,
 )
 register(
     "events_gaps_islands",  # per-user consecutive-day streak census
-    _q(lambda spark, sf: temporal.gaps_islands(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.gaps_islands(load_table(spark, sf, "events")),
     temporal.GAPS_ISLANDS_SQL,
 )
 register(
     "events_daily_gapfill",  # calendar spine LEFT join, explicit zero days
-    _q(lambda spark, sf: temporal.daily_gapfill(load_table(spark, sf, "events"))),
+    lambda spark, sf: temporal.daily_gapfill(load_table(spark, sf, "events")),
     temporal.DAILY_GAPFILL_SQL,
 )
 register(
     "docs_winnowing",  # MOSS winnowing fingerprint census per doc
-    _q(
-        lambda spark, sf: llm_text.winnowing(
-            _docs(spark, sf), sel=_dedup_shared(spark, sf, "winnow_fp")
-        )
+    lambda spark, sf: llm_text.winnowing(
+        _docs(spark, sf), sel=_dedup_shared(spark, sf, "winnow_fp")
     ),
     llm_text.WINNOWING_SQL,
 )
 register(
     "docs_winnowing_pairs",  # near-dup pairs over the winnowed index
-    _q(
-        lambda spark, sf: llm_text.winnowing_pairs(
-            _docs(spark, sf), sel=_dedup_shared(spark, sf, "winnow_fp")
-        )
+    lambda spark, sf: llm_text.winnowing_pairs(
+        _docs(spark, sf), sel=_dedup_shared(spark, sf, "winnow_fp")
     ),
     llm_text.WINNOWING_PAIRS_SQL,
 )
 register(
     "docs_editdistance_verify",  # levenshtein re-score of blocked candidates
-    _q(
-        lambda spark, sf: llm_dedup.editdistance_verify(
-            _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
-        )
+    lambda spark, sf: llm_dedup.editdistance_verify(
+        _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
     ),
     llm_dedup.EDITDISTANCE_VERIFY_SQL,
 )
 register(
     "emb_semdedup",  # SemDeDup: within-kmeans-cell cosine dedup, keep-lowest
-    _q(
-        lambda spark, sf: llm_sim.semdedup(
-            _emb(spark, sf), cells=_dedup_shared(spark, sf, "kc_cells")
-        )
+    lambda spark, sf: llm_sim.semdedup(
+        _emb(spark, sf), cells=_dedup_shared(spark, sf, "kc_cells")
     ),
     llm_sim.SEMDEDUP_SQL,
 )
 register(
     "emb_cluster_balanced_sample",  # diversity-preserving per-cell downsample
-    _q(
-        lambda spark, sf: llm_sim.cluster_balanced_sample(
-            _emb(spark, sf), cells=_dedup_shared(spark, sf, "kc_cells")
-        )
+    lambda spark, sf: llm_sim.cluster_balanced_sample(
+        _emb(spark, sf), cells=_dedup_shared(spark, sf, "kc_cells")
     ),
     llm_sim.CLUSTER_BALANCED_SAMPLE_SQL,
 )
 register(
     "docs_dsir_weights",  # DSIR hashed-ngram importance log-weights vs 'en' target
-    _q(lambda spark, sf: llm_cur.dsir_weights(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.dsir_weights(_docs(spark, sf)),
     llm_cur.DSIR_WEIGHTS_SQL,
 )
 register(
     "emb_knn_ivf_exact",  # oracle-checked IVF probe/scan over the exact quantizer
-    _q(
-        lambda spark, sf: llm_sim.knn_ivf_exact(
-            _emb(spark, sf), cells=_dedup_shared(spark, sf, "kc_cells")
-        )
+    lambda spark, sf: llm_sim.knn_ivf_exact(
+        _emb(spark, sf), cells=_dedup_shared(spark, sf, "kc_cells")
     ),
     llm_sim.KNN_IVF_EXACT_SQL,
 )
@@ -2158,72 +1952,60 @@ register(
 
 register(
     "orders_graph_hits",  # exact-integer HITS on the customer->part bipartite graph
-    _q(
-        lambda spark, sf: analytics.graph_hits(
-            load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
-        )
+    lambda spark, sf: analytics.graph_hits(
+        load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
     ),
     analytics.GRAPH_HITS_SQL,
 )
 register(
     "docs_bbit_minhash",  # Li-König b-bit minhash compression/accuracy panel
-    _q(
-        lambda spark, sf: llm_dedup.bbit_minhash(
-            _docs(spark, sf),
-            exact=_dedup_shared(spark, sf, "jac_scores"),
-            sig=_dedup_shared(spark, sf, "mh_sig"),
-        )
+    lambda spark, sf: llm_dedup.bbit_minhash(
+        _docs(spark, sf),
+        exact=_dedup_shared(spark, sf, "jac_scores"),
+        sig=_dedup_shared(spark, sf, "mh_sig"),
     ),
     llm_dedup.BBIT_MINHASH_SQL,
 )
 register(
     "docs_kneser_ney_bigram",  # interpolated KN-smoothed bigram LM table
-    _q(lambda spark, sf: llm_text.kneser_ney_bigram(_docs(spark, sf))),
+    lambda spark, sf: llm_text.kneser_ney_bigram(_docs(spark, sf)),
     llm_text.KNESER_NEY_BIGRAM_SQL,
 )
 register(
     "emb_mmr_select",  # maximal-marginal-relevance diversified top-k
-    _q(lambda spark, sf: llm_sim.mmr_select(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.mmr_select(_emb(spark, sf)),
     llm_sim.MMR_SELECT_SQL,
 )
 register(
     "docs_readability",  # Flesch-style reading ease, vowel-run syllable proxy
-    _q(lambda spark, sf: llm_text.readability(_docs(spark, sf))),
+    lambda spark, sf: llm_text.readability(_docs(spark, sf)),
     llm_text.READABILITY_SQL,
 )
 register(
     "stream_hopping_counts",  # watermarked hopping-window agg via real stream graph
-    _q(
-        lambda spark, sf: streaming_windowed.hopping_counts_stream_batch(
-            spark, load_table(spark, sf, "events")
-        )
+    lambda spark, sf: streaming_windowed.hopping_counts_stream_batch(
+        spark, load_table(spark, sf, "events")
     ),
     streaming_windowed.HOPPING_STREAM_SQL,
 )
 register(
     "stream_dedup_watermark",  # at-least-once -> effectively-once via stream dedup
-    _q(
-        lambda spark, sf: streaming_windowed.dedup_counts_stream_batch(
-            spark, load_table(spark, sf, "events")
-        )
+    lambda spark, sf: streaming_windowed.dedup_counts_stream_batch(
+        spark, load_table(spark, sf, "events")
     ),
     streaming_windowed.DEDUP_STREAM_SQL,
 )
 register(
     "stream_enrich_join",  # stream-static broadcast enrichment via real graph
-    _q(
-        lambda spark, sf: streaming_windowed.enrich_counts_stream_batch(
-            spark, load_table(spark, sf, "events")
-        )
+    lambda spark, sf: streaming_windowed.enrich_counts_stream_batch(
+        spark, load_table(spark, sf, "events")
     ),
     streaming_windowed.ENRICH_STREAM_SQL,
 )
 register(
     "stream_click_attribution",  # stream-stream watermarked interval join
-    _q(
-        lambda spark, sf: streaming_windowed.click_attribution_stream_batch(
-            spark, load_table(spark, sf, "events")
-        )
+    lambda spark, sf: streaming_windowed.click_attribution_stream_batch(
+        spark, load_table(spark, sf, "events")
     ),
     streaming_windowed.CLICK_ATTRIBUTION_STREAM_SQL,
 )
@@ -2239,10 +2021,8 @@ register(
     # size; tests/test_testdata_contract.py fails first at >4096
     # vectors and names this key in its guard message.
     "emb_semantic_decontamination",
-    _q(
-        lambda spark, sf: llm_sim.semantic_decontamination(
-            _emb(spark, sf), pairs=_dedup_shared(spark, sf, "emb_pairs")
-        )
+    lambda spark, sf: llm_sim.semantic_decontamination(
+        _emb(spark, sf), pairs=_dedup_shared(spark, sf, "emb_pairs")
     ),
     llm_sim.SEMANTIC_DECONTAMINATION_SQL,
 )
@@ -2253,10 +2033,8 @@ register(
     # of the exact key's quadratic all-pairs asset. NEW round 8 →
     # round-8 window.
     "emb_semantic_decontamination_governed",
-    _q(
-        lambda spark, sf: llm_sim.semantic_decontamination_governed(
-            _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
-        )
+    lambda spark, sf: llm_sim.semantic_decontamination_governed(
+        _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
     ),
     llm_sim.SEMANTIC_DECONTAMINATION_GOVERNED_SQL,
 )
@@ -2265,268 +2043,242 @@ register(
     # (exact 5-gram / fuzzy MinHash / semantic SRP), all on the SAME
     # doc-level split. NEW round 8 → round-8 window.
     "docs_decontamination_panel",
-    _q(
-        lambda spark, sf: llm_cur.decontamination_panel(
-            _docs(spark, sf),
-            _emb(spark, sf),
-            sig=_dedup_shared(spark, sf, "mh_sig"),
-            shingles=_dedup_shared(spark, sf, "sh5"),
-            srp_sigs=_dedup_shared(spark, sf, "srp_sigs"),
-        )
+    lambda spark, sf: llm_cur.decontamination_panel(
+        _docs(spark, sf),
+        _emb(spark, sf),
+        sig=_dedup_shared(spark, sf, "mh_sig"),
+        shingles=_dedup_shared(spark, sf, "sh5"),
+        srp_sigs=_dedup_shared(spark, sf, "srp_sigs"),
     ),
     llm_cur.DECONTAMINATION_PANEL_SQL,
 )
 register(
     "docs_crosslingual_neardup",  # language-pair near-dup leakage grid
-    _q(
-        lambda spark, sf: llm_dedup.crosslingual_neardup(
-            _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
-        )
+    lambda spark, sf: llm_dedup.crosslingual_neardup(
+        _docs(spark, sf), scores=_dedup_shared(spark, sf, "jac_scores")
     ),
     llm_dedup.CROSSLINGUAL_NEARDUP_SQL,
 )
 register(
     "orders_reorder_intervals",  # per-customer reorder cadence (integer moments)
-    _q(lambda spark, sf: analytics.reorder_intervals(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.reorder_intervals(load_table(spark, sf, "orders")),
     analytics.REORDER_INTERVALS_SQL,
 )
 register(
     "docs_gopher_rules",  # published Gopher quality-rule panel (fixed thresholds)
-    _q(lambda spark, sf: llm_cur.gopher_rules(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.gopher_rules(_docs(spark, sf)),
     llm_cur.GOPHER_RULES_SQL,
 )
 register(
     "docs_gopher_ablation",  # rule pass/fail pattern sheet: sole-fail kill attribution
-    _q(lambda spark, sf: llm_cur.gopher_ablation(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.gopher_ablation(_docs(spark, sf)),
     llm_cur.GOPHER_ABLATION_SQL,
 )
 register(
     # the repetition half of the Gopher gate (top/dup n-gram character
     # fractions, published thresholds) — NEW round 7 → round-8 window
     "docs_gopher_repetition",
-    _q(lambda spark, sf: llm_cur.gopher_repetition(_docs(spark, sf))),
+    lambda spark, sf: llm_cur.gopher_repetition(_docs(spark, sf)),
     llm_cur.GOPHER_REPETITION_SQL,
 )
 register(
     "multimodal_phash_neardup",  # integer 2-D DCT pHash + banded hamming verify
-    _q(lambda spark, sf: llm_mm.media_phash_neardup(_docs(spark, sf))),
+    lambda spark, sf: llm_mm.media_phash_neardup(_docs(spark, sf)),
     llm_mm.MEDIA_PHASH_NEARDUP_SQL,
 )
 register(
     "emb_intrinsic_dim",  # TwoNN manifold-dimension estimate over md5 anchors
-    _q(lambda spark, sf: llm_sim.intrinsic_dim(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.intrinsic_dim(_emb(spark, sf)),
     llm_sim.INTRINSIC_DIM_SQL,
 )
 register(
     "docs_rake_keywords",  # RAKE degree/frequency phrase extraction
-    _q(lambda spark, sf: llm_text.rake_keywords(_docs(spark, sf))),
+    lambda spark, sf: llm_text.rake_keywords(_docs(spark, sf)),
     llm_text.RAKE_KEYWORDS_SQL,
 )
 register(
     "orders_seasonal_index",  # classical monthly multiplicative seasonality
-    _q(lambda spark, sf: analytics.seasonal_index(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.seasonal_index(load_table(spark, sf, "orders")),
     analytics.SEASONAL_INDEX_SQL,
 )
 register(
     "events_power_analysis",  # MDE -> per-arm sample-size sizing table
-    _q(lambda spark, sf: analytics.power_analysis(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.power_analysis(load_table(spark, sf, "events")),
     analytics.POWER_ANALYSIS_SQL,
 )
 register(
     "emb_mahalanobis_ood",  # diagonal-Mahalanobis corpus-global OOD flags
-    _q(lambda spark, sf: llm_sim.mahalanobis_ood(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.mahalanobis_ood(_emb(spark, sf)),
     llm_sim.MAHALANOBIS_OOD_SQL,
 )
 register(
     "part_abc_xyz",  # ABC revenue class x XYZ weekly-demand-CV class matrix
-    _q(lambda spark, sf: tx.abc_xyz(load_table(spark, sf, "lineitem"))),
+    lambda spark, sf: tx.abc_xyz(load_table(spark, sf, "lineitem")),
     tx.ABC_XYZ_SQL,
 )
 register(
     "docs_holdout_perplexity",  # md5 train/eval split, out-of-sample bigram LM
-    _q(lambda spark, sf: llm_text.holdout_perplexity(_docs(spark, sf))),
+    lambda spark, sf: llm_text.holdout_perplexity(_docs(spark, sf)),
     llm_text.HOLDOUT_PERPLEXITY_SQL,
 )
 register(
     "events_ab_test_srm",  # md5-bucketed A/B readout: SRM chi2 + Welch lift
-    _q(lambda spark, sf: analytics.ab_test_srm(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.ab_test_srm(load_table(spark, sf, "events")),
     analytics.AB_TEST_SRM_SQL,
 )
 register(
     "orders_wip_sweep",  # Little's law queueing panel via interval sweep
-    _q(
-        lambda spark, sf: tx.wip_sweep(
-            load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
-        )
+    lambda spark, sf: tx.wip_sweep(
+        load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
     ),
     tx.WIP_SWEEP_SQL,
 )
 register(
     "part_croston_forecast",  # intermittent-demand SES with exact dyadic weights
-    _q(lambda spark, sf: tx.croston_forecast(load_table(spark, sf, "lineitem"))),
+    lambda spark, sf: tx.croston_forecast(load_table(spark, sf, "lineitem")),
     tx.CROSTON_SQL,
 )
 register(
     "part_price_elasticity",  # ln-OLS demand elasticity from discount variation
-    _q(
-        lambda spark, sf: tx.price_elasticity(
-            load_table(spark, sf, "part"), load_table(spark, sf, "lineitem")
-        )
+    lambda spark, sf: tx.price_elasticity(
+        load_table(spark, sf, "part"), load_table(spark, sf, "lineitem")
     ),
     tx.PRICE_ELASTICITY_SQL,
 )
 register(
     "part_newsvendor_stock",  # critical-fractile stocking (nonparametric)
-    _q(lambda spark, sf: tx.newsvendor_stock(load_table(spark, sf, "lineitem"))),
+    lambda spark, sf: tx.newsvendor_stock(load_table(spark, sf, "lineitem")),
     tx.NEWSVENDOR_SQL,
 )
 register(
     "part_eoq_policy",  # EOQ + reorder point: the order-sizing leg of the inventory family
-    _q(lambda spark, sf: tx.eoq_policy(load_table(spark, sf, "lineitem"))),
+    lambda spark, sf: tx.eoq_policy(load_table(spark, sf, "lineitem")),
     tx.EOQ_POLICY_SQL,
 )
 register(
     "part_safety_stock",  # inventory-control SS/ROP under stochastic demand+lead
-    _q(
-        lambda spark, sf: tx.part_safety_stock(
-            load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
-        )
+    lambda spark, sf: tx.part_safety_stock(
+        load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
     ),
     tx.PART_SAFETY_STOCK_SQL,
 )
 register(
     "orders_segment_migration",  # customer value-quartile transition matrix
-    _q(
-        lambda spark, sf: analytics.segment_migration(load_table(spark, sf, "orders"))
-    ),
+    lambda spark, sf: analytics.segment_migration(load_table(spark, sf, "orders")),
     analytics.SEGMENT_MIGRATION_SQL,
 )
 register(
     "events_retention_decay_fit",  # pooled power-law retention fit (ln-OLS)
-    _q(
-        lambda spark, sf: temporal.retention_decay_fit(load_table(spark, sf, "events"))
-    ),
+    lambda spark, sf: temporal.retention_decay_fit(load_table(spark, sf, "events")),
     temporal.RETENTION_DECAY_FIT_SQL,
 )
 register(
     "events_conformal_forecast",  # split-conformal interval on the Holt point
-    _q(
-        lambda spark, sf: analytics.conformal_forecast(load_table(spark, sf, "events"))
-    ),
+    lambda spark, sf: analytics.conformal_forecast(load_table(spark, sf, "events")),
     analytics.CONFORMAL_SQL,
 )
 register(
     "events_daily_acf",  # autocorrelation diagnostic at lags 1..14
-    _q(lambda spark, sf: analytics.daily_acf(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.daily_acf(load_table(spark, sf, "events")),
     analytics.DAILY_ACF_SQL,
 )
 register(
     "events_holt_forecast",  # Holt linear-trend forecast, exact unrolled weights
-    _q(lambda spark, sf: analytics.holt_forecast(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.holt_forecast(load_table(spark, sf, "events")),
     analytics.HOLT_FORECAST_SQL,
 )
 register(
     "events_holt_backtest",  # rolling-origin 1-step forecast evaluation
-    _q(lambda spark, sf: analytics.holt_backtest(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.holt_backtest(load_table(spark, sf, "events")),
     analytics.HOLT_BACKTEST_SQL,
 )
 register(
     "events_bootstrap_ci",  # deterministic Poisson-bootstrap mean CI per type
-    _q(lambda spark, sf: analytics.bootstrap_ci(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.bootstrap_ci(load_table(spark, sf, "events")),
     analytics.BOOTSTRAP_CI_SQL,
 )
 register(
     "events_shapley_attribution",  # exact coalition-lattice Shapley credit
-    _q(
-        lambda spark, sf: temporal.shapley_attribution(
-            load_table(spark, sf, "events")
-        )
+    lambda spark, sf: temporal.shapley_attribution(
+        load_table(spark, sf, "events")
     ),
     temporal.SHAPLEY_SQL,
 )
 register(
     "events_winsorized_stats",  # winsorized/trimmed robust moments per type
-    _q(
-        lambda spark, sf: analytics.winsorized_stats(load_table(spark, sf, "events"))
-    ),
+    lambda spark, sf: analytics.winsorized_stats(load_table(spark, sf, "events")),
     analytics.WINSORIZED_STATS_SQL,
 )
 register(
     "events_kde_density",  # Epanechnikov KDE on a 64-point grid
-    _q(lambda spark, sf: analytics.kde_density(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.kde_density(load_table(spark, sf, "events")),
     analytics.KDE_DENSITY_SQL,
 )
 register(
     "events_quantile_sketch",  # bottom-k-by-hash quantile estimates + error panel
-    _q(lambda spark, sf: analytics.quantile_sketch(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.quantile_sketch(load_table(spark, sf, "events")),
     analytics.QUANTILE_SKETCH_SQL,
 )
 register(
     "events_tail_index",  # Hill tail-index / Pareto alpha from top-k stats
-    _q(lambda spark, sf: analytics.tail_index(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.tail_index(load_table(spark, sf, "events")),
     analytics.TAIL_INDEX_SQL,
 )
 register(
     "events_james_stein",  # empirical-Bayes shrinkage of per-type means
-    _q(
-        lambda spark, sf: analytics.james_stein_means(load_table(spark, sf, "events"))
-    ),
+    lambda spark, sf: analytics.james_stein_means(load_table(spark, sf, "events")),
     analytics.JAMES_STEIN_SQL,
 )
 register(
     "events_ks_test",  # two-sample Kolmogorov-Smirnov over the value domain
-    _q(lambda spark, sf: analytics.ks_test(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.ks_test(load_table(spark, sf, "events")),
     analytics.KS_TEST_SQL,
 )
 register(
     "events_mann_whitney",  # nonparametric rank-sum A/B test (tie-corrected)
-    _q(lambda spark, sf: analytics.mann_whitney_u(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.mann_whitney_u(load_table(spark, sf, "events")),
     analytics.MANN_WHITNEY_SQL,
 )
 register(
     "events_cuped",  # CUPED variance-reduction experiment readout
-    _q(lambda spark, sf: analytics.cuped_adjustment(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.cuped_adjustment(load_table(spark, sf, "events")),
     analytics.CUPED_SQL,
 )
 register(
     "emb_kmeanspp_init",  # k-means++ D^2-weighted seeding, exact unrolled oracle
-    _q(lambda spark, sf: llm_sim.kmeanspp_init(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.kmeanspp_init(_emb(spark, sf)),
     llm_sim.KMEANSPP_INIT_SQL,
 )
 register(
     "emb_kmeansbb_candidates",  # k-means|| one-pass-per-round oversampling + D^2 weights
-    _q(lambda spark, sf: llm_sim.kmeansbb_candidates(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.kmeansbb_candidates(_emb(spark, sf)),
     llm_sim.KMEANSBB_CANDIDATES_SQL,
 )
 register(
     "orders_theta_forecast",  # theta-method monthly revenue forecast (exact OLS + dyadic SES)
-    _q(lambda spark, sf: analytics.theta_forecast(load_table(spark, sf, "orders"))),
+    lambda spark, sf: analytics.theta_forecast(load_table(spark, sf, "orders")),
     analytics.THETA_FORECAST_SQL,
 )
 register(
     "orders_holt_winters",  # additive Holt-Winters: exact unrolled triple smoothing
-    _q(
-        lambda spark, sf: analytics.holt_winters_forecast(
-            load_table(spark, sf, "orders")
-        )
+    lambda spark, sf: analytics.holt_winters_forecast(
+        load_table(spark, sf, "orders")
     ),
     analytics.HOLT_WINTERS_SQL,
 )
 register(
     "events_l_diversity",  # distinct + entropy l-diversity over QI groups (fixed-order pivot)
-    _q(lambda spark, sf: analytics.l_diversity(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.l_diversity(load_table(spark, sf, "events")),
     analytics.L_DIVERSITY_SQL,
 )
 register(
     "events_cusum_control",  # tabular CUSUM via the exact prefix-sum/running-min identity
-    _q(lambda spark, sf: analytics.cusum_control(load_table(spark, sf, "events"))),
+    lambda spark, sf: analytics.cusum_control(load_table(spark, sf, "events")),
     analytics.CUSUM_CONTROL_SQL,
 )
 register(
     "events_zorder_extents",  # Z-order vs time-sorted layout: per-file 2-D extents
-    _q(
-        lambda spark, sf: _bucketed.zorder_extents(load_table(spark, sf, "events"))
-    ),
+    lambda spark, sf: _bucketed.zorder_extents(load_table(spark, sf, "events")),
     _bucketed.ZORDER_EXTENTS_SQL,
 )
 register(
@@ -2535,7 +2287,7 @@ register(
     # argmax map pass, no retrain — and emit the per-cell load panel
     # with retrain-candidate flags. Full oracle. NEW round 12 → window
     "emb_ivf_delta_assign",
-    _q(lambda spark, sf: llm_sim.ivf_delta_assign(_emb(spark, sf))),
+    lambda spark, sf: llm_sim.ivf_delta_assign(_emb(spark, sf)),
     llm_sim.IVF_DELTA_ASSIGN_SQL,
 )
 

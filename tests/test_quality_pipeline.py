@@ -8,6 +8,7 @@ from datetime import datetime
 import pytest
 from conftest import make_bronze
 
+from logistics_data_pipeline_spark.operators import star
 from logistics_data_pipeline_spark.operators.quality import run_quality_gate
 from logistics_data_pipeline_spark.pipeline import (
     QualityGateFailed,
@@ -129,8 +130,16 @@ def test_fact_fast_equals_join_build(spark):
                 estimated_delivery="2024-01-10"),
         ],
     )
-    a = build_warehouse(bronze, persist=False, fast_fact=True)["fact_event"]
-    b = build_warehouse(bronze, persist=False, fast_fact=False)["fact_event"]
+    wh = build_warehouse(bronze, persist=False)
+    a = wh["fact_event"]
+    b = star.fact_event(
+        wh["int_valid_logistics_events"],
+        wh["dim_order"],
+        wh["dim_time"],
+        wh["dim_status"],
+        wh["dim_location"],
+        wh["dim_carrier"],
+    )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 

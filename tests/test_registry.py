@@ -163,3 +163,54 @@ def test_every_oracled_key_is_driver_covered_or_windowed():
         f"oracled keys with no driver hash row and no window slot: "
         f"{uncovered} — append them to the current window in registry.py"
     )
+
+
+def test_shared_asset_builds_once_under_concurrent_callers(monkeypatch):
+    """Eight threads missing the same asset at once (the threaded panel
+    legs) get one build and one identical persisted object. No Spark:
+    a counting fake builder stands in for the real one."""
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    builds = []
+
+    class Frame:
+        def persist(self):
+            return self
+
+    def fake_build(spark, sf):
+        builds.append(sf)
+        time.sleep(0.2)  # hold the build open while the others arrive
+        return Frame()
+
+    monkeypatch.setitem(registry._ASSETS, "stg", fake_build)
+    monkeypatch.setattr(registry, "_SHARED", {})
+    spark = SimpleNamespace(sparkContext=object())
+    barrier = threading.Barrier(8)
+    got = []
+
+    def call():
+        barrier.wait()
+        got.append(registry._dedup_shared(spark, "sf-fake", "stg"))
+
+    threads = [threading.Thread(target=call) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert builds == ["sf-fake"]
+    assert len(got) == 8 and all(df is got[0] for df in got)
+
+
+def test_clear_session_caches_keeps_assets_until_full_reset(spark, sf_dir):
+    valid = registry._valid(spark, sf_dir)
+    sh3 = registry._dedup_shared(spark, sf_dir, "sh3")
+    sc = id(spark.sparkContext)
+    registry.clear_session_caches(spark)
+    assert registry._SHARED[(sc, sf_dir, "valid")] is valid
+    assert registry._SHARED[(sc, sf_dir, "sh3")] is sh3
+    frames = [df for key, df in registry._SHARED.items() if key[0] == sc]
+    registry.clear_session_caches(spark, keep_layers=False)
+    assert not [key for key in registry._SHARED if key[0] == sc]
+    assert frames and not any(df.is_cached for df in frames)

@@ -113,28 +113,3 @@ def test_decontamination_panel_agrees_with_its_three_legs(spark, sf_dir):
         assert row.n_methods_flagged == expected_n
         assert row.any_contaminated == (expected_n > 0)
     assert n_sem > 0  # the semantic leg is non-vacuous on committed data
-
-
-def test_bench_warms_every_shared_asset():
-    """Every name `registry._dedup_shared` can build must appear in
-    bench.py's untimed warm list — a new asset that skips the warmup
-    silently pollutes its first consumer's bench median (the round-6
-    ensemble_components lesson). Pure source inspection, no Spark."""
-    import inspect
-    import re
-
-    from logistics_data_pipeline_spark import registry
-
-    # the build dispatch lives in _dedup_shared_build since the r12
-    # optimization round split the memo/lock front-end from the builder
-    src = inspect.getsource(registry._dedup_shared_build)
-    names = set(re.findall(r'name == "([a-z0-9_]+)"', src))
-    assert names, "no asset names parsed — did _dedup_shared_build change shape?"
-    bench = open("bench.py").read()
-    start = bench.index("for asset in (")
-    warm = set(re.findall(r'"([a-z0-9_]+)"', bench[start : bench.index("):", start)]))
-    missing = names - warm
-    assert not missing, (
-        f"shared assets not warmed by bench.py: {sorted(missing)} — add them "
-        "to the warm tuple or their first bench consumer pays the build"
-    )

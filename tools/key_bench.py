@@ -30,40 +30,23 @@ def main() -> None:
     ap.add_argument(
         "--warm",
         default="",
-        help="comma-separated _dedup_shared asset names to warm (same "
-        "set bench.py warms; default: the ANN/graph assets)",
+        help="comma-separated registry._ASSETS names to warm "
+        "(default: the whole table, as bench.py does)",
     )
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
+    warm = args.warm.split(",") if args.warm else list(registry._ASSETS)
+    unknown = [a for a in warm if a not in registry._ASSETS]
+    if unknown:
+        ap.error(f"unknown --warm assets: {unknown}; known: {list(registry._ASSETS)}")
 
     spark = get_spark("key-bench")
     qs = registry.queries()
     bad = [n for n in args.names if n not in qs]
     assert not bad, f"unknown keys: {bad}"
 
-    # bench.py's warm-up, trimmed: silver layers + the shared assets.
-    registry._valid(spark, args.sf).write.mode("overwrite").format("noop").save()
-    warm = (
-        args.warm.split(",")
-        if args.warm
-        else [
-            "srp_sigs",
-            "knn_ivf",
-            "knn_ivfpq",
-            "nsw_graph",
-            "beam_pq_books",
-            "beam_pq_codes",
-            "jac_scores",
-            "con_scores",
-            "sim_sig",
-            "components",
-            "sh5",
-            "mh_sig",
-        ]
-    )
+    # bench.py's warm-up: the session assets, outside the timed region.
     for asset in warm:
-        if not asset:
-            continue
         registry._dedup_shared(spark, args.sf, asset).write.mode(
             "overwrite"
         ).format("noop").save()
