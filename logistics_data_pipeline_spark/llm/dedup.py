@@ -454,25 +454,22 @@ def fuzzy_decontamination(
     # (shuffle + full sort) over `verified` PLUS a separate groupBy over
     # the same frame PLUS a re-join — the candidate+verify subtree was
     # inlined twice in the plan. One aggregation computes all three:
-    # MAX(struct(jaccard, -eval_id)) is exactly the row_number-1 pick
-    # (highest jaccard, ties → lowest eval_id; Spark's struct order is
-    # lexicographic and its DESC sort and MAX agree on the double total
-    # order, NaN largest).
+    # MIN_BY(eval_id, struct(-jaccard, eval_id)) is exactly the
+    # row_number-1 pick (highest jaccard, ties → lowest eval_id; Spark's
+    # struct order is lexicographic).
     agg = verified.groupBy("train_id").agg(
         F.count("*").cast("bigint").alias("n_candidates"),
         F.max("jaccard").alias("max_jaccard"),
-        F.max(
-            F.struct(
-                F.col("jaccard").alias("j"), (-F.col("eval_id")).alias("ne")
-            )
-        ).alias("_top"),
+        F.min_by("eval_id", F.struct(-F.col("jaccard"), F.col("eval_id"))).alias(
+            "top_eval_id"
+        ),
     )
     return (
         agg.select(
             F.col("train_id").alias("doc_id"),
             "n_candidates",
             "max_jaccard",
-            (-F.col("_top.ne")).alias("top_eval_id"),
+            "top_eval_id",
             (F.col("max_jaccard") >= threshold).alias("is_fuzzy_contaminated"),
         )
         .orderBy("doc_id")

@@ -472,6 +472,26 @@ AHASH_BAND_BITS = 8  # 8 bands x 8 bits
 AHASH_MAX_HAMMING = 8
 
 
+def _fixed_width_bytes(col, need: int):
+    """The (rows × ``need``) uint8 block of an Arrow ``binary`` column
+    whose every value is exactly ``need`` bytes long. BinaryArray has no
+    ``.offsets`` accessor, so the int32 offsets buffer is read directly,
+    honouring a possible array slice offset. Any other layout raises
+    rather than being misread: ``large_binary`` (int64 offsets) is a
+    TypeError, a ragged payload a ValueError."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not pa.types.is_binary(col.type):
+        raise TypeError(f"expected an Arrow binary column, got {col.type}")
+    n = len(col)
+    off = np.frombuffer(col.buffers()[1], dtype=np.int32)[col.offset : col.offset + n + 1]
+    if not np.all(np.diff(off) == need):
+        raise ValueError(f"payload not fixed-width ({need} bytes)")
+    data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
+    return data[off[0] : off[0] + n * need].reshape(n, need)
+
+
 def media_ahash_neardup(
     docs: DataFrame,
     max_hamming: int = AHASH_MAX_HAMMING,
@@ -547,15 +567,8 @@ def media_ahash_neardup(
             n = rb.num_rows
             if n == 0:
                 continue
-            col = rb.column(1)
-            off = np.frombuffer(col.buffers()[1], dtype=np.int32)[
-                col.offset : col.offset + n + 1
-            ]
-            if not np.all(np.diff(off) == need):
-                raise ValueError("aHash payload not fixed-width")
-            data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
             blocks = (
-                data[off[0] : off[0] + n * need]
+                _fixed_width_bytes(rb.column(1), need)
                 .reshape(n, AHASH_BLOCKS, AHASH_BYTES_PER_BLOCK)
                 .astype(np.int64)
                 .sum(axis=2)
@@ -838,17 +851,8 @@ def _phash_sigs(docs: DataFrame) -> DataFrame:
             n = rb.num_rows
             if n == 0:
                 continue
-            col = rb.column(1)
-            # BinaryArray has no .offsets accessor; read the offsets
-            # buffer directly, honouring a possible array slice offset
-            off = np.frombuffer(col.buffers()[1], dtype=np.int32)[
-                col.offset : col.offset + n + 1
-            ]
-            if not np.all(np.diff(off) == need):
-                raise ValueError("pHash payload not fixed-width")
-            data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
             grid = (
-                data[off[0] : off[0] + n * need]
+                _fixed_width_bytes(rb.column(1), need)
                 .reshape(n, PHASH_N, PHASH_N)  # [media, y, x] (row-major)
                 .astype(np.int64)
             )

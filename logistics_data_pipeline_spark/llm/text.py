@@ -1847,6 +1847,11 @@ def heaps_fit(docs: DataFrame) -> DataFrame:
     )
 
 
+# A flat vocabulary curve (constant V) has var_pop(ln V) = 0, and both
+# engines define regr_r2 as 1 there. DuckDB's multi-threaded combine of
+# partial variance states can leave roundoff in that variance and then
+# returns corr² of the noise, a different value from run to run, so the
+# oracle states the constant-V case itself.
 HEAPS_FIT_SQL = f"""
 WITH toks AS (
   SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
@@ -1873,7 +1878,8 @@ pts AS (
 SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
        ROUND(regr_slope(LN(CAST(v AS DOUBLE)), LN(CAST(n AS DOUBLE))), 6) AS heaps_beta,
        ROUND(regr_intercept(LN(CAST(v AS DOUBLE)), LN(CAST(n AS DOUBLE))), 6) AS heaps_intercept,
-       ROUND(regr_r2(LN(CAST(v AS DOUBLE)), LN(CAST(n AS DOUBLE))), 6) AS r2,
+       ROUND(CASE WHEN MIN(v) = MAX(v) AND MIN(n) < MAX(n) THEN CAST(1 AS DOUBLE)
+                  ELSE regr_r2(LN(CAST(v AS DOUBLE)), LN(CAST(n AS DOUBLE))) END, 6) AS r2,
        CAST(MAX(v) AS BIGINT) AS vocab_total,
        CAST(MAX(n) AS BIGINT) AS tokens_total
 FROM pts

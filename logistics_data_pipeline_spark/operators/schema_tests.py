@@ -21,52 +21,6 @@ from pyspark.sql import functions as F
 from .validity import INVALID_REASONS
 
 
-def _one(name: str, df: DataFrame) -> DataFrame:
-    return df.select(
-        F.lit(name).alias("test_name"),
-        F.coalesce(F.first("violations"), F.lit(0)).cast("bigint").alias("violations"),
-    )
-
-
-def not_null(df: DataFrame, col: str, name: str) -> DataFrame:
-    return _one(name, df.agg(F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias("violations")))
-
-
-def unique(df: DataFrame, col: str, name: str) -> DataFrame:
-    dup = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(col)
-        .count()
-        .filter(F.col("count") > 1)
-        .agg(F.count("*").alias("violations"))
-    )
-    return _one(name, dup)
-
-
-def accepted_values(df: DataFrame, col: str, values: list, name: str) -> DataFrame:
-    bad = df.agg(
-        F.sum(
-            F.when(F.col(col).isNotNull() & ~F.col(col).isin(values), 1).otherwise(0)
-        ).alias("violations")
-    )
-    return _one(name, bad)
-
-
-def relationships(
-    child: DataFrame, child_col: str, parent: DataFrame, parent_col: str, name: str
-) -> DataFrame:
-    orphans = (
-        child.filter(F.col(child_col).isNotNull())
-        .join(
-            parent.select(F.col(parent_col).alias("__pk")),
-            F.col(child_col) == F.col("__pk"),
-            "left_anti",
-        )
-        .agg(F.count("*").alias("violations"))
-    )
-    return _one(name, orphans)
-
-
 def relationships_onepass(
     fact: DataFrame, fks: list[tuple[str, DataFrame, str, str]]
 ) -> DataFrame:

@@ -16,6 +16,8 @@ values job (a full scan at scale) and the output schema is static.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1568,9 +1570,10 @@ def markov_stationary(events: DataFrame, n_iter: int = MARKOV_ITERS) -> DataFram
     orchestration (4 eager checkpoints + broadcasts over ≤25-row
     frames); now the transition matrix collects once and the π updates
     run in Python float64 with ``_round_half_up`` mirroring Spark's
-    ROUND-on-DOUBLE exactly. Per-step 9-dp rounding absorbs summation-
-    order ulps the same way it already absorbed the Spark↔DuckDB order
-    difference; oracle hash-checked at every committed SF."""
+    ROUND-on-DOUBLE exactly. Every sum is ``math.fsum`` (correctly
+    rounded), so the trajectory does not depend on the order
+    ``collect`` returns the transitions in; oracle hash-checked at
+    every committed SF."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         events.select(
@@ -1593,22 +1596,15 @@ def markov_stationary(events: DataFrame, n_iter: int = MARKOV_ITERS) -> DataFram
     from ..llm.similarity import _round_half_up
 
     tlist = sorted(r["t"] for r in type_rows)
-    # transition triples in a canonical (from, to) order so the float
-    # accumulation order is deterministic run-to-run
-    trans = sorted(
-        ((r["from_type"], r["to_type"], r["p"]) for r in mat_rows),
-        key=lambda x: (x[1], x[0]),
-    )
     k = len(tlist)
     val = {t: _round_half_up(1.0 / k, MARKOV_ROUND) for t in tlist} if k else {}
     for _ in range(n_iter):
-        m: dict = {}
-        for frm, to, p in trans:
-            if frm in val:
-                m[to] = m.get(to, 0.0) + val[frm] * p
-        s = 0.0
-        for to in sorted(m):
-            s += m[to]
+        terms: dict = {}
+        for r in mat_rows:
+            if r["from_type"] in val:
+                terms.setdefault(r["to_type"], []).append(val[r["from_type"]] * r["p"])
+        m = {to: math.fsum(ts) for to, ts in terms.items()}
+        s = math.fsum(m.values())
         val = {
             to: _round_half_up(m[to] / s, MARKOV_ROUND) for to in sorted(m)
         }

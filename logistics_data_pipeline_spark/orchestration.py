@@ -5,7 +5,7 @@ The reference orchestrates five tasks hourly with per-task retries
 ``retry_delay=timedelta(minutes=5)``, ``schedule_interval='@hourly'``,
 ``catchup=False``, linear chain ``stream_to_minio >> load_to_duckdb >>
 data_quality_check >> dbt_transform >> dbt_test``). The task BODIES were
-already ported (`pipeline.run_pipeline`, the DQ gate, the schema tests);
+already ported (the DQ gate, `pipeline.build_warehouse`, the schema tests);
 this module ports the POLICY so a user of the reference keeps the same
 failure behavior: a task that fails is retried up to ``retries`` times
 with ``retry_delay`` between attempts, a task that exhausts its retries

@@ -17,13 +17,11 @@ Scale notes:
 
 from __future__ import annotations
 
-from datetime import datetime
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from .operators.dq_summary import dq_invalid_delivery_summary
-from .operators.quality import QualityReport, run_quality_gate
+from .operators.quality import QualityReport
 from .operators.staging import stage_events
 from .operators.star import (
     dim_carrier,
@@ -45,17 +43,13 @@ class QualityGateFailed(RuntimeError):
         self.report = report
 
 
-def build_warehouse(
-    bronze: DataFrame,
-    restamp: datetime | None = None,
-    persist: bool = True,
-) -> dict[str, DataFrame]:
+def build_warehouse(bronze: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
     """Bronze → staging → valid/invalid → star, as lazy DataFrames.
 
     The fact uses the join-free formulation (star.fact_event_fast: one
     shuffle, output-identical to the six-join reference shape that
     star.fact_event keeps as the test reference)."""
-    stg = stage_events(bronze, restamp=restamp)
+    stg = stage_events(bronze)
     valid = valid_events(stg)
     if persist:
         valid = valid.persist(StorageLevel.MEMORY_AND_DISK)
@@ -72,23 +66,6 @@ def build_warehouse(
         "fact_event": fact_event_fast(valid),
         "dq_invalid_delivery_summary": dq_invalid_delivery_summary(stg, invalid),
     }
-
-
-def run_pipeline(
-    spark: SparkSession,
-    bronze: DataFrame,
-    as_of_date: str,
-    enforce_quality: bool = True,
-) -> dict[str, DataFrame]:
-    """DQ gate then warehouse build (DAG order; SURVEY.md §3.2).
-
-    Errors (checks 1–5) halt; warnings (6–7) proceed — exactly the
-    reference's severity semantics.
-    """
-    report = run_quality_gate(bronze, as_of_date)
-    if enforce_quality and not report.passed:
-        raise QualityGateFailed(report)
-    return build_warehouse(bronze)
 
 
 def register_views(warehouse: dict[str, DataFrame]) -> None:

@@ -949,8 +949,6 @@ register(
     # encode → CRC-validated 5-filter decode → feature extraction;
     # the oracle recomputes the expected decoded pixels directly, so a
     # hash match proves the codec round-trips bit-exactly per row.
-    # NEW this round → round-8 driver window (round 7's 50 slots are
-    # reserved for the verification-debt rotation).
     "multimodal_png_roundtrip",
     lambda spark, sf: llm_mm.png_roundtrip_features(_docs(spark, sf)),
     llm_mm.PNG_ROUNDTRIP_SQL,
@@ -1055,91 +1053,6 @@ register(
     lambda spark, sf: analytics.heavy_hitters(load_table(spark, sf, "events")),
     analytics.HEAVY_HITTERS_SQL,
 )
-
-# --- registration order ----------------------------------------------------
-#
-# The driver's correctness harness verifies the FIRST 50 registered keys
-# per round, evaluated on the END-of-round repo state. Rounds 1-3 rotated
-# every registered key through the window at least once (122/122 have a
-# driver CORRECTNESS row). From round 4 the window is regressions-first
-# (VERDICT r3 #4): this round's fixes and rewrites, then standing
-# canaries, with the remaining slots filling from stable registration
-# order (reference-core keys first) as re-verification canaries.
-#
-# The driver verifies the FIRST 50 registered keys each round. Round-6
-# window policy: (a) every key whose code changed this round — the
-# shared dedup-frame refactor, the sampling governor, the epoch-compare
-# and NULLIF oracle hardenings — then (b) the keys whose last driver
-# hash-match is the STALEST. Rows-only keys are EXCLUDED from the
-# window (the driver adds only a row-count there, which the local gate
-# already pins); never-driver-checked keys take those slots. (The
-# testdata has been
-# regenerated four times since). Keys NEW this round MUST be appended
-# here (not just register()-ed) or they wait a full round for a check.
-
-_DRIVER_WINDOW = [
-    # Round-12 window (the driver hash-checks the FIRST 50 keys;
-    # _apply_registration_order asserts the length is exactly 50).
-    # Policy: every key whose code/oracle changed this round, every NEW
-    # key, then the STALEST green canaries computed from the committed
-    # CORRECTNESS_r01-r11 ledger (latest green hash row, oldest first).
-    # The now-8 rows-only keys are excluded by design (no oracle to
-    # hash; each has an exact oracle-checked twin or pinned floor).
-    #
-    # -- (a) new / changed keys this round --
-    "emb_ivf_delta_assign",  # NEW: incremental IVF maintenance panel, full oracle
-    "multimodal_phash_neardup",  # CHANGED: complete multiprobe banding redesign (exact at every width; committed-SF values unchanged)
-    "emb_knn_graph_delta",  # RE-PIN: is_new predicate param threaded for the streaming leg (default split unchanged)
-    "stream_sessionize_closed",  # RE-PIN: non-null assert ahead of the vectorized fold (ADVICE r11 #2)
-    # -- (b) stalest green canaries, oldest driver row first
-    #        (r05: 28, r06: 18) --
-    "docs_tfidf_cosine_pairs",  # the r11 51st-slot casualty, first in line
-    "docs_weighted_sample",
-    "emb_cell_balance",
-    "emb_cosine_histogram",
-    "emb_exact_dup_vectors",
-    "emb_incremental_topk",
-    "emb_kmeans_update",
-    "emb_mips_topk",
-    "emb_norm_stats",
-    "events_bloom_panel",
-    "events_funnel_windowed",
-    "events_lateness_panel",
-    "events_rate_bursts",
-    "events_seasonal_deviation",
-    "events_type_effect_sizes",
-    "events_type_overlap",
-    "events_value_anomalies_mad",
-    "multimodal_slice_neardup",
-    "orders_abc_analysis",
-    "orders_customer_rfm",
-    "orders_item_pagerank",
-    "supplier_lead_times",
-    "supplier_reliability",
-    "tpch_q11_important_parts",
-    "tpch_q12_priority_shipping",
-    "tpch_q15_top_supplier",
-    "tpch_q20_part_promotion",
-    "tpch_q2_min_cost_supplier",
-    "docs_bbit_minhash",
-    "docs_crosslingual_neardup",
-    "docs_dsir_weights",
-    "docs_fuzzy_decontamination",
-    "docs_gopher_rules",
-    "docs_kneser_ney_bigram",
-    "docs_neardup_minhash",
-    "docs_perplexity_buckets",
-    "docs_rake_keywords",
-    "docs_readability",
-    "docs_rrf_fusion",
-    "docs_source_overlap",
-    "docs_winnowing_pairs",
-    "emb_hamming_cosine_calibration",
-    "emb_intrinsic_dim",
-    "emb_knn_ivf_exact",
-    "emb_label_outliers",
-    "emb_mahalanobis_ood",
-]
 register(
     "emb_knn_ivfpq",  # IVF cells + PQ/ADC scoring: doubly approximate → rows-only
     lambda spark, sf: _dedup_shared(spark, sf, "knn_ivfpq"),
@@ -1449,7 +1362,7 @@ register(
 register(
     # graph-based ANN (VERDICT r8 #8 / r9 #8): beam search over a
     # symmetrized kNN graph (NSW-lite) — FULL unrolled oracle, unlike
-    # the rows-only IVF/IVF-PQ keys — NEW round 10 → driver window
+    # the rows-only IVF/IVF-PQ keys
     "emb_knn_graph_beam",
     lambda spark, sf: llm_sim.knn_graph_beam(
         _emb(spark, sf), graph=_dedup_shared(spark, sf, "nsw_graph")
@@ -1460,7 +1373,7 @@ register(
     # HNSW-style layered entry (VERDICT r10 #8): beam search seeded at
     # each query's nearest vertex among a ⌈√n⌉ md5-sampled top layer,
     # cutting the round budget 6 → 4 with the recall floor intact —
-    # full unrolled oracle. NEW round 11 → driver window
+    # full unrolled oracle
     "emb_knn_graph_beam_layered",
     lambda spark, sf: llm_sim.knn_graph_beam(
         _emb(spark, sf),
@@ -1490,7 +1403,7 @@ register(
     # NN-descent kNN-graph construction (Dong et al. WWW'11) — the
     # graph-ANN INDEX BUILD path (knn_graph_beam searches the graph;
     # this builds it without the exact O(n^2) pass) — full unrolled
-    # oracle. NEW round 10 → driver window
+    # oracle
     "emb_nn_descent_graph",
     lambda spark, sf: llm_sim.nn_descent_graph(
         _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
@@ -1500,8 +1413,7 @@ register(
 register(
     # incremental kNN-graph maintenance (VERDICT r10 #2): fold the
     # vec_id%5==0 "arriving batch" into the graph built over the rest
-    # without re-forming the old pair space — full unrolled oracle.
-    # NEW round 11 → driver window
+    # without re-forming the old pair space — full unrolled oracle
     "emb_knn_graph_delta",
     lambda spark, sf: llm_sim.knn_graph_delta(
         _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
@@ -2011,7 +1923,7 @@ register(
 )
 register(
     # semantic-level train/eval leakage audit over the shared exact
-    # cosine pair asset — NEW round 7 → round-8 window.
+    # cosine pair asset.
     # SCALE CONTRACT (VERDICT r9 #6): this key is the QUADRATIC exact
     # ORACLE TWIN — it exists so the governed production path below
     # (`emb_semantic_decontamination_governed`) has a hash-checkable
@@ -2030,8 +1942,7 @@ register(
     # PRODUCTION semantic decontamination (VERDICT r7 #2): SRP-LSH
     # banded train×eval candidates + exact-cosine verify — the
     # docs_fuzzy_decontamination shape, linear-ish per decade, instead
-    # of the exact key's quadratic all-pairs asset. NEW round 8 →
-    # round-8 window.
+    # of the exact key's quadratic all-pairs asset.
     "emb_semantic_decontamination_governed",
     lambda spark, sf: llm_sim.semantic_decontamination_governed(
         _emb(spark, sf), sigs=_dedup_shared(spark, sf, "srp_sigs")
@@ -2041,7 +1952,7 @@ register(
 register(
     # Method-agreement drop sheet across all three decon passes
     # (exact 5-gram / fuzzy MinHash / semantic SRP), all on the SAME
-    # doc-level split. NEW round 8 → round-8 window.
+    # doc-level split.
     "docs_decontamination_panel",
     lambda spark, sf: llm_cur.decontamination_panel(
         _docs(spark, sf),
@@ -2076,7 +1987,7 @@ register(
 )
 register(
     # the repetition half of the Gopher gate (top/dup n-gram character
-    # fractions, published thresholds) — NEW round 7 → round-8 window
+    # fractions, published thresholds)
     "docs_gopher_repetition",
     lambda spark, sf: llm_cur.gopher_repetition(_docs(spark, sf)),
     llm_cur.GOPHER_REPETITION_SQL,
@@ -2285,26 +2196,8 @@ register(
     # incremental IVF maintenance (VERDICT r11 #3): fold the vec_id%5==0
     # arriving batch into the exact quantizer trained on the REST — one
     # argmax map pass, no retrain — and emit the per-cell load panel
-    # with retrain-candidate flags. Full oracle. NEW round 12 → window
+    # with retrain-candidate flags. Full oracle.
     "emb_ivf_delta_assign",
     lambda spark, sf: llm_sim.ivf_delta_assign(_emb(spark, sf)),
     llm_sim.IVF_DELTA_ASSIGN_SQL,
 )
-
-def _apply_registration_order() -> None:
-    global _QUERIES, _ORACLES
-    missing = [k for k in _DRIVER_WINDOW if k not in _QUERIES]
-    assert not missing, f"_DRIVER_WINDOW names unregistered keys: {missing}"
-    # The driver hash-checks exactly the FIRST 50 registered keys; a 51st
-    # window entry silently falls outside the verified horizon while still
-    # looking pinned (ADVICE r11 #1 — round 11 shipped 51 entries).
-    assert len(_DRIVER_WINDOW) == 50, (
-        f"_DRIVER_WINDOW must be exactly 50 keys (driver horizon), "
-        f"got {len(_DRIVER_WINDOW)}"
-    )
-    order = _DRIVER_WINDOW + [k for k in _QUERIES if k not in _DRIVER_WINDOW]
-    _QUERIES = {k: _QUERIES[k] for k in order}
-    _ORACLES = {k: _ORACLES[k] for k in order if k in _ORACLES}
-
-
-_apply_registration_order()

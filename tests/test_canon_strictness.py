@@ -6,28 +6,17 @@ driver's ``_canon`` (pandas ``sort_values`` → ``Categorical`` factorize
 → ``TypeError: unhashable type: 'numpy.ndarray'``) while the replica
 printed ok, because it pre-stringified list columns before sorting
 (VERDICT r3 #2). These tests pin the strict behavior: non-hashable
-column values raise in ``norm_frame``, and no registered query is
-allowed to emit a complex-typed (array/map/struct) output column at
-all — the driver canonicalizes even rows-only results.
+column values raise in ``norm_frame``. The per-key ban on
+complex-typed (array/map/struct) output columns runs inside
+``test_registry.py::test_query_runs_on_smallest_sf``.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
 import numpy as np
 import pandas as pd
 import pytest
-
-sys.path.insert(
-    0,
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
-)
-
-from check_correctness import norm_frame  # noqa: E402
-
-from logistics_data_pipeline_spark import registry  # noqa: E402
+from check_correctness import norm_frame
 
 
 def test_norm_frame_rejects_ndarray_columns():
@@ -76,22 +65,3 @@ def test_tracked_persists_are_released(spark, sf_dir):
     for df in tracked:
         assert df.storageLevel == StorageLevel.NONE
 
-
-def test_no_registered_query_emits_complex_typed_columns(spark, sf_dir):
-    """Schema-level gate over every registered key (including rows-only
-    ones — the driver counts rows only AFTER canonicalizing, so an
-    array column nulls even ``spark_rows``, as docs_simhash did in r3).
-    Building the DataFrame is lazy, so this walks all 120+ schemas
-    cheaply."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    bad = []
-    for name, fn in registry.queries().items():
-        schema = fn(spark, sf_dir).schema
-        for field in schema.fields:
-            if isinstance(field.dataType, (ArrayType, MapType, StructType)):
-                bad.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
-    assert not bad, (
-        "complex-typed output columns crash the driver canonicalizer; "
-        "emit long format or serialize instead: " + "; ".join(bad)
-    )

@@ -8,15 +8,9 @@ different driver hash. The replica must flag that class, not mask it.
 
 from __future__ import annotations
 
-import os
-import sys
-
 import duckdb
 import pandas as pd
-
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-
-from check_correctness import compare, dtype_family  # noqa: E402
+from check_correctness import compare, dtype_family
 
 
 def test_int_vs_float_family_mismatch_fails():

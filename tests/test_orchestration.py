@@ -9,6 +9,7 @@ from datetime import datetime
 
 from logistics_data_pipeline_spark import orchestration as orch
 from logistics_data_pipeline_spark.adapters.testdata import bronze_events
+from logistics_data_pipeline_spark.pipeline import QualityGateFailed
 
 
 class FakeSleep:
@@ -156,6 +157,8 @@ def test_full_pipeline_chain_end_to_end(spark, sf_dir, tmp_path):
         run = orch.run_dag(tasks, sleep=sleep)
         assert not run.succeeded
         assert run.state_of("data_quality_check") == "failed"
+        gate = next(t for t in run.tasks if t.task_id == "data_quality_check")
+        assert isinstance(gate.error, QualityGateFailed)
         assert run.state_of("dbt_transform") == "upstream_failed"
         assert run.state_of("dbt_test") == "upstream_failed"
         # the failing task was retried per policy before failing the run

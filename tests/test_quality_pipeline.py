@@ -5,16 +5,11 @@ from __future__ import annotations
 
 from datetime import datetime
 
-import pytest
 from conftest import make_bronze
 
 from logistics_data_pipeline_spark.operators import star
 from logistics_data_pipeline_spark.operators.quality import run_quality_gate
-from logistics_data_pipeline_spark.pipeline import (
-    QualityGateFailed,
-    build_warehouse,
-    run_pipeline,
-)
+from logistics_data_pipeline_spark.pipeline import build_warehouse
 from logistics_data_pipeline_spark.sources.bronze import incremental_insert
 
 CLEAN = {
@@ -81,12 +76,6 @@ def test_weight_over_5000_fails_dq_but_passes_validity(spark):
     assert report.counts["invalid_weights"] == 1
     wh = build_warehouse(bronze, persist=False)
     assert wh["int_valid_logistics_events"].count() == 1
-
-
-def test_run_pipeline_halts_on_errors(spark):
-    bronze = make_bronze(spark, [row(order_id="")])
-    with pytest.raises(QualityGateFailed):
-        run_pipeline(spark, bronze, AS_OF)
 
 
 def test_build_warehouse_end_to_end(spark):

@@ -1,9 +1,11 @@
-"""Registry contract: every query callable returns a DataFrame on
-sf0.001 with a stable schema; oracle coverage is explicit."""
+"""Registry contract: every query callable's sf0.001 output equals its
+DuckDB oracle's (or, for the explicit rows-only set, canonicalizes)."""
 
 from __future__ import annotations
 
 import pytest
+from check_correctness import compare, duckdb_views, norm_frame
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from logistics_data_pipeline_spark import registry
 
@@ -28,11 +30,33 @@ def test_all_queries_have_oracles_or_are_whitelisted():
     assert q - o == ROWS_ONLY_OK, f"missing oracle for: {sorted(q - o - ROWS_ONLY_OK)}"
 
 
+@pytest.fixture(scope="session")
+def oracle_db(sf_dir):
+    con = duckdb_views(sf_dir)
+    yield con
+    con.close()
+
+
 @pytest.mark.parametrize("name", sorted(registry.queries()))
-def test_query_runs_on_smallest_sf(spark, sf_dir, name):
+def test_query_runs_on_smallest_sf(spark, sf_dir, oracle_db, name):
+    """Each key is built once. No output column may be array/map/struct
+    typed: the canonicalizer cannot sort such cells, rows-only keys
+    included. An oracled key's rows must then equal its DuckDB oracle's
+    under ``check_correctness.compare``; a rows-only key must at least
+    canonicalize."""
     df = registry.queries()[name](spark, sf_dir)
-    assert df.columns, name
-    assert df.count() >= 0
+    complex_cols = [
+        f"{f.name}: {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    assert not complex_cols, f"emit long format or serialize instead: {complex_cols}"
+    pdf = df.toPandas()
+    sql = registry.oracle_sql().get(name)
+    if sql is None:
+        norm_frame(pdf)
+    else:
+        assert compare(name, pdf, oracle_db.execute(sql).df()) == []
 
 
 def test_flagship_nonempty(spark, sf_dir):
@@ -130,38 +154,6 @@ def test_previously_shadowed_keys_bind_real_operators(spark, sf_dir):
     cdc = qs["docs_cdc_chunk_dedup"](spark, sf_dir)
     assert "doc_id" in cdc.columns or any("chunk" in c for c in cdc.columns), (
         cdc.columns
-    )
-
-
-def test_every_oracled_key_is_driver_covered_or_windowed():
-    """Ledger-closure guard (VERDICT r7 #1, closed in round 8): every
-    oracled key must either have a green driver hash row in some
-    committed CORRECTNESS_r*.json or sit in the CURRENT driver window.
-    Registering a new oracled key without appending it to the window
-    makes it wait a full round for a driver check — this fails loudly
-    at registration time instead (the round-7 rule, now mechanical)."""
-    import glob
-    import json
-    import os
-
-    from logistics_data_pipeline_spark import registry
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        for key, row in json.load(open(path)).items():
-            if (
-                row.get("hash_match")
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and not row.get("err")
-            ):
-                green.add(key)
-    window = set(registry._DRIVER_WINDOW)
-    uncovered = sorted(set(registry._ORACLES) - green - window)
-    assert not uncovered, (
-        f"oracled keys with no driver hash row and no window slot: "
-        f"{uncovered} — append them to the current window in registry.py"
     )
 
 

@@ -130,6 +130,25 @@ class TestPhashCompleteMultiprobe:
 # --- incremental IVF maintenance (VERDICT r11 #3) ---------------------------
 
 
+def test_fixed_width_bytes_reads_binary_and_rejects_large_binary():
+    """The aHash/pHash Arrow reader decodes int32 offsets (a sliced
+    batch included); a ``large_binary`` column (int64 offsets, as under
+    ``useLargeVarTypes``) must raise instead of being misread."""
+    import pyarrow as pa
+
+    from logistics_data_pipeline_spark.llm.multimodal import _fixed_width_bytes
+
+    payload = [b"abcd", b"efgh", b"ijkl"]
+    ids = pa.array([0, 1, 2], type=pa.int64())
+    rb = pa.RecordBatch.from_arrays([ids, pa.array(payload, type=pa.binary())], names=["id", "px"])
+    assert _fixed_width_bytes(rb.slice(1).column(1), 4).tolist() == [list(b"efgh"), list(b"ijkl")]
+    large = pa.RecordBatch.from_arrays(
+        [ids, pa.array(payload, type=pa.large_binary())], names=["id", "px"]
+    )
+    with pytest.raises(TypeError, match="large_binary"):
+        _fixed_width_bytes(large.column(1), 4)
+
+
 class TestIvfDeltaAssign:
     def test_injected_assets_reproduce_registered_output(self, spark, sf_dir):
         """The serving path — deployed centroids + persisted old

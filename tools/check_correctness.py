@@ -12,6 +12,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
@@ -116,37 +117,34 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[
     return problems
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument(
-        "--window",
-        type=int,
-        default=0,
-        metavar="N",
-        help="check only the FIRST N registered keys — mirrors the "
-        "driver's per-round verification window (N=50)",
-    )
-    ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entrymod
-    from logistics_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("check-correctness")
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table in ``sf_dir``,
+    the schema every oracle SQL reads."""
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
+            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entrymod
+    from logistics_data_pipeline_spark.session import get_spark
+
+    spark = get_spark("check-correctness")
+    con = duckdb_views(args.sf)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     names = args.names or list(queries)
-    if args.window:
-        names = names[: args.window]
     n_pass = n_fail = n_rowsonly = 0
     for name in names:
         fn = queries[name]
