@@ -523,20 +523,11 @@ def decontamination_panel(
     banded MinHash candidates, banded SRP candidates) joined 1:1 on
     doc_id; nothing new is pair-forming."""
     from .dedup import fuzzy_decontamination
-    from .similarity import (
-        NEARDUP_THRESHOLD,
-        _srp_dims,
-        _verified_pair_cosines,
-        srp_buckets,
-    )
+    from .similarity import NEARDUP_THRESHOLD, _verified_pair_cosines, srp_buckets
 
     splits = split_assign(docs).select("doc_id", "split")
     if srp_sigs is None:
-        if band_bits is None:
-            n_bits, band_bits = _srp_dims(emb)  # governor sizes BOTH knobs
-            srp_sigs = srp_buckets(emb, n_bits=n_bits, band_bits=band_bits)
-        else:
-            srp_sigs = srp_buckets(emb, band_bits=band_bits)
+        srp_sigs = srp_buckets(emb, band_bits=band_bits)
 
     # OPTIMIZATION r13 (VERDICT item 5 — the ann_recall_panel recipe,
     # guide §2.6/§3.3): the three verdict legs and the embedding-id

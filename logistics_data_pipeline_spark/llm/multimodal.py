@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import shuffle_parts
+from ..session import shuffle_parts, source_rows, track_persist
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -472,6 +472,27 @@ AHASH_BAND_BITS = 8  # 8 bands x 8 bits
 AHASH_MAX_HAMMING = 8
 
 
+def _ahash_band_bits(n_media: int) -> int:
+    """aHash band-width governor tiers for ``n_media`` payloads
+    (callers size with ``session.source_rows``). Block-sum bits
+    CONCENTRATE (text-derived payloads share length/byte statistics),
+    so real bucket occupancy far exceeds the uniform estimate: the
+    16-bit tier measured 76.6×/decade at sf10 (500k docs, 544 s), and
+    a third step, 32-bit bands (2 bands over the 64-bit signature),
+    takes over past 131072 media. Pigeonhole with plain 2-band lookup
+    then only guarantees hamming ≤ 1, so the 32-bit tier MULTIPROBES:
+    the probe side additionally emits every flip-1-bit variant of each
+    band value (33 probe rows per band), and a pair whose bands split
+    a ≤3-bit difference 2+1 matches through the variant that flips the
+    lone bit — restoring the hamming ≤ 3 candidate guarantee at 33×
+    probe fan-out with still no pair-forming join. pHash keeps its
+    16-bit tier — its DCT-derived bits spread (measured f100 3.87 at
+    the same decade)."""
+    if n_media <= 8192:
+        return AHASH_BAND_BITS
+    return 16 if n_media <= 131_072 else 32
+
+
 def _fixed_width_bytes(col, need: int):
     """The (rows × ``need``) uint8 block of an Arrow ``binary`` column
     whose every value is exactly ``need`` bytes long. BinaryArray has no
@@ -556,10 +577,11 @@ def media_ahash_neardup(
         .repartition(shuffle_parts(docs), "media_id")
         .select("media_id", "px")
     )
+    if band_bits is None:
+        # media is a filtered 1:1 map of docs: footer rows bound it
+        band_bits = _ahash_band_bits(source_rows(media))
     import numpy as np
     import pyarrow as pa
-
-    from ..session import track_persist
 
     def _ahash(batches):
         w32 = 1 << np.arange(32, dtype=np.int64)
@@ -586,34 +608,14 @@ def media_ahash_neardup(
                 names=["media_id", "lo", "hi"],
             )
 
-    # persist: the packed signatures feed the governor count, the band
-    # derivation (both join sides) and the Hamming verify
-    sigs = track_persist(
-        media.mapInArrow(_ahash, schema="media_id long, lo long, hi long")
-    )
-    if band_bits is None:
-        n_media = sigs.count()  # one sizing action, the SRP precedent
-        # SCALING_r10: the 16-bit tier measured 76.6×/decade at sf10
-        # (500k docs, 544 s) — block-sum bits CONCENTRATE (text-derived
-        # payloads share length/byte statistics), so real bucket
-        # occupancy far exceeds the uniform estimate and the tier needs
-        # a third step: 32-bit bands (2 bands over the 64-bit
-        # signature) past 131072 media. Pigeonhole with plain 2-band
-        # lookup then only guarantees hamming ≤ 1, so the 32-bit tier
-        # MULTIPROBES (VERDICT r10 #1): the probe side additionally
-        # emits every flip-1-bit variant of each band value (33 probe
-        # rows per band), and a pair whose bands split a ≤3-bit
-        # difference 2+1 matches through the variant that flips the
-        # lone bit — restoring the hamming ≤ 3 candidate guarantee
-        # (2 bands × (0-or-1 flipped) − 1) at 33× probe fan-out with
-        # still no pair-forming join. pHash keeps its 16-bit tier —
-        # its DCT-derived bits spread (measured f100 3.87 at the same
-        # decade).
-        band_bits = (
-            AHASH_BAND_BITS
-            if n_media <= 8192
-            else (16 if n_media <= 131_072 else 32)
-        )
+    # The packed signatures feed the band derivation (both join sides)
+    # and the Hamming verify, so they are built once. A lazy local
+    # checkpoint does that inside the first consuming job; an
+    # unmaterialized persist would cost AQE one cache-build job per
+    # scan (13 jobs vs 8 for the key at sf0.01).
+    sigs = media.mapInArrow(
+        _ahash, schema="media_id long, lo long, hi long"
+    ).localCheckpoint(eager=False)
     if multiprobe is None:
         multiprobe = band_bits >= 32
     half = 32 // band_bits  # bands per packed 32-bit signature half
@@ -624,9 +626,9 @@ def media_ahash_neardup(
         src = F.col("lo") if k < half else F.col("hi")
         return F.shiftright(src, (k % half) * band_bits).bitwiseAND(F.lit(mask))
 
-    # band values unpack from the persisted packed halves (the same
-    # positional layout the old per-bit groupBy produced) — a cheap
-    # projection, so the band frame itself no longer needs a persist
+    # band values unpack from the checkpointed packed halves (the same
+    # positional layout a per-bit groupBy would produce) — a cheap
+    # projection, so the band frame itself needs no checkpoint
     bands = sigs.select(
         "media_id",
         F.posexplode(F.array(*[_band_val(k) for k in range(n_bands)])).alias(
@@ -828,8 +830,6 @@ def _phash_sigs(docs: DataFrame) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    from ..session import track_persist
-
     need = PHASH_N * PHASH_N
     media = (
         docs_as_media(docs)
@@ -941,8 +941,6 @@ def media_phash_neardup(
     bound: candidates grow ~u²·probes/2^band_bits — Hamming 10 of 64
     bits is a dense radius, so past u ≈ 10⁶ unique sigs the scale
     path is a wider signature (128-bit pHash), not more probes."""
-    from ..session import track_persist
-
     if band_bits is None:
         band_bits = 16
     radius = PHASH_PROBE_RADIUS[band_bits]

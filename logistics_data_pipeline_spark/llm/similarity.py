@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import shuffle_parts
+from ..session import shuffle_parts, source_rows
 
 
 # 0.4 keeps the registered query non-trivial on the synthetic
@@ -736,16 +736,16 @@ def srp_planes(emb: DataFrame, n_bits: int, seed: int) -> DataFrame:
     return dims.crossJoin(js).select("pos", "j", g.alias("g"))
 
 
-def _srp_dims(emb: DataFrame) -> tuple[int, int]:
-    """(n_bits, band_bits) governor sizing (one count() — the only
-    driver-side step in the SRP family).
+def _srp_dims(n_rows: int) -> tuple[int, int]:
+    """(n_bits, band_bits) governor tiers for a corpus of ``n_rows``
+    vectors (callers size with ``session.source_rows``).
 
     Two knobs move together (SCALING_r10 postmortem): widening a BAND
     divides expected bucket occupancy (candidate volume ~ bands ·
     n²/2^band_bits stays ~linear only if 2^band_bits grows with n),
     while adding BANDS (total bits) restores the recall the wider band
     gives up (the LSH S-curve: P(candidate) = 1 − (1 − p^r)^b).
-    Round 9's width-only governor switched 8→16 bits at 262k — far too
+    A width-only governor that switched 8→16 bits at 262k was far too
     late: at the sf10 decade (200k vectors) the 8-bit regime's
     occupancy hit ~780 and the governed decontamination went 45.7× per
     decade (532 s). Tiers, each holding expected occupancy ≤ ~128 at
@@ -763,13 +763,6 @@ def _srp_dims(emb: DataFrame) -> tuple[int, int]:
     Past ~4M vectors the documented next step is 24-bit bands at
     n_bits ≈ 1536 (same arithmetic), or multiprobe to trade bands for
     probe fan-out."""
-    return _srp_dims_for_n(emb.count())
-
-
-def _srp_dims_for_n(n_rows: int) -> tuple[int, int]:
-    """``_srp_dims`` tier table for an already-known corpus size — the
-    entry point for callers that have paid their sizing count() (ADVICE
-    r10: ``_knn_graph`` was double-counting through the frame overload)."""
     if n_rows <= 4096:
         return 64, 4
     if n_rows <= 32_768:
@@ -779,14 +772,18 @@ def _srp_dims_for_n(n_rows: int) -> tuple[int, int]:
 
 def srp_buckets(
     emb: DataFrame,
-    n_bits: int = 64,
-    band_bits: int = 4,
+    n_bits: int | None = None,
+    band_bits: int | None = None,
     seed: int = SRP_SEED,
     impl: str = "auto",
 ) -> DataFrame:
     """(vec_id, band, bucket) SRP-LSH banded signature rows — the
     candidate-blocking structure shared by ``embedding_neardup_lsh``
-    and ``semantic_decontamination_governed``. Declarative path: the
+    and ``semantic_decontamination_governed``.
+
+    ``band_bits=None`` lets the ``_srp_dims`` governor pick both widths
+    from ``source_rows(emb)``; an explicit ``band_bits`` uses
+    ``n_bits`` (64 when not given). Declarative path: the
     plane matrix is dims × n_bits rows broadcast to a map-side fanout
     join, projections partial-aggregate on (vec_id, j), buckets on
     (vec_id, band); sign bits compare ROUND(proj, 6) ≥ 0 in both
@@ -807,6 +804,9 @@ def srp_buckets(
     is a projection landing EXACTLY on the ±0.5e-6 rounding boundary
     (np.round half-even vs HALF_UP) — measure-zero over md5-derived
     planes, and confined to the non-oracled wide tier."""
+    if band_bits is None:
+        n_bits, band_bits = _srp_dims(source_rows(emb))
+    n_bits = n_bits or 64
     if impl == "blas" or (impl == "auto" and n_bits > 64):
         return _srp_buckets_blas(emb, n_bits, band_bits, seed)
     planes = srp_planes(emb, n_bits, seed)
@@ -948,7 +948,7 @@ def _verified_pair_cosines(
 def embedding_neardup_lsh(
     emb: DataFrame,
     threshold: float = NEARDUP_THRESHOLD,
-    n_bits: int = 64,
+    n_bits: int | None = None,
     band_bits: int | None = None,
     seed: int = SRP_SEED,
     sigs: DataFrame | None = None,
@@ -985,8 +985,8 @@ def embedding_neardup_lsh(
     at FIXED band_bits the bucket space is constant, so expected bucket
     occupancy grows linearly with n and candidate pairs QUADRATICALLY —
     measured 43× per decade at the sf1 probe (167 s), and again 45.7×
-    at the sf10 decade when round 9's width-only tiers left the 8-bit
-    regime running to 262k vectors. ``_srp_dims`` now sizes BOTH knobs:
+    at the sf10 decade when width-only tiers left the 8-bit regime
+    running to 262k vectors. ``_srp_dims`` therefore sizes BOTH knobs:
     band width steps up (4 → 8 → 16 bits) to hold occupancy ≤ ~128 at
     each tier's ceiling, and the TOTAL bit count grows with the width
     (64 → 64 → 512 bits, i.e. 16 → 8 → 32 bands) so recall at cosine
@@ -994,8 +994,8 @@ def embedding_neardup_lsh(
     alone would destroy: 4 bands of 16 bits recall only ≈ 0.30). The
     signature build is linear in n_bits and stays a map-side fanout —
     candidate-join volume, not signature width, is what kills a
-    decade. The one-count() sizing action is the only driver-side
-    step.
+    decade. Sizing reads ``source_rows`` (Parquet footers for a
+    file-backed corpus), so no job runs before the plan.
 
     ``sigs`` injects a pre-built (vec_id, band, bucket) frame — the
     registry's shared ``srp_sigs`` asset, built once at the governor
@@ -1003,8 +1003,6 @@ def embedding_neardup_lsh(
     the decontamination panel's semantic leg. When given, it takes
     precedence over ``band_bits``."""
     if sigs is None:
-        if band_bits is None:
-            n_bits, band_bits = _srp_dims(emb)  # governor sizes BOTH knobs
         sigs = srp_buckets(emb, n_bits=n_bits, band_bits=band_bits, seed=seed)
     a = sigs.select(
         F.col("band"), F.col("bucket"), F.col("vec_id").alias("a_id")
@@ -5947,7 +5945,7 @@ ORDER BY eval_id
 def semantic_decontamination_governed(
     emb: DataFrame,
     threshold: float = NEARDUP_THRESHOLD,
-    n_bits: int = 64,
+    n_bits: int | None = None,
     band_bits: int | None = None,
     seed: int = SRP_SEED,
     sigs: DataFrame | None = None,
@@ -5989,8 +5987,6 @@ def semantic_decontamination_governed(
         ).alias("is_eval"),
     )
     if sigs is None:
-        if band_bits is None:
-            n_bits, band_bits = _srp_dims(emb)  # governor sizes BOTH knobs
         sigs = srp_buckets(emb, n_bits=n_bits, band_bits=band_bits, seed=seed)
     sigs = sigs.join(split, "vec_id")
     ev = sigs.filter(F.col("is_eval")).select(
@@ -6573,8 +6569,8 @@ NSW_EXACT_BOUND = 4096  # exact all-pairs graph build up to here
 
 def _knn_graph_scored(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
     """``_knn_graph`` WITH the build cosines kept: (src, dst, cosine),
-    symmetrized and distinct. Factored out in OPTIMIZATION r12 so
-    ``knn_graph_delta`` (whose merge step needs every old edge SCORED)
+    symmetrized and distinct. Kept separate so ``knn_graph_delta``
+    (whose merge step needs every old edge SCORED)
     can reuse the cosines the build just computed instead of paying a
     second corpus-join re-score pass over the whole edge list. (The
     exact branch's scorer sums in a different order than
@@ -6584,7 +6580,7 @@ def _knn_graph_scored(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
     exactly this reason.) ``distinct`` keys on the full row; cosine is a function
     of the (src, dst) pair, so this is the same edge set ``_knn_graph``
     produced."""
-    n_corpus = corpus.count()
+    n_corpus = source_rows(corpus)
     if n_corpus <= NSW_EXACT_BOUND:
         scored = embedding_neardup(corpus, threshold=-1.0)
         both = scored.select(
@@ -6601,8 +6597,7 @@ def _knn_graph_scored(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
             .select("src", "dst", "cosine")
         )
     else:
-        n_bits, band_bits = _srp_dims_for_n(n_corpus)
-        sigs = srp_buckets(corpus, n_bits=n_bits, band_bits=band_bits)
+        sigs = srp_buckets(corpus, *_srp_dims(n_corpus))
         out_edges = _nn_descent_edges(corpus, k=m, sigs=sigs).select(
             "src", "dst", "cosine"
         )
@@ -6629,9 +6624,9 @@ def _knn_graph(corpus: DataFrame, m: int = NSW_M) -> DataFrame:
     O(n²) pass is unaffordable by construction, so the graph comes
     from LSH-seeded NN-descent (``_nn_descent_edges`` at k=m — the
     build SCALING_r10 measures; edge recall vs exact ≈0.94 at probe
-    scale), symmetrized the same way. The one count() is the sizing
-    action every governor in the suite pays — paid ONCE and threaded
-    into ``_srp_dims_for_n`` on the wide branch (ADVICE r10).
+    scale), symmetrized the same way. The corpus is sized once
+    (``source_rows``, an upper bound for this filtered scan) and that
+    one size also picks the SRP tier on the wide branch.
 
     (A ``distinct`` over (src, dst) pairs equals ``_knn_graph_scored``'s
     distinct over (src, dst, cosine) projected down, because cosine is
@@ -7279,8 +7274,7 @@ def nn_descent_graph(
         "vec_id", "embedding"
     )
     if sigs is None:
-        n_bits, band_bits = _srp_dims(emb)
-        sigs = srp_buckets(emb, n_bits=n_bits, band_bits=band_bits)
+        sigs = srp_buckets(emb)
     sigs = sigs.filter(F.col("vec_id") >= n_queries)
     edges = _nn_descent_edges(corpus, k=k, iters=iters, salt=salt, sigs=sigs)
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
@@ -7305,18 +7299,16 @@ def _nn_descent_edges(
     from ..operators.analytics import exact_row_number
 
     if sigs is None:
-        n_bits, band_bits = _srp_dims(corpus)
-        sigs = srp_buckets(corpus, n_bits=n_bits, band_bits=band_bits)
+        sigs = srp_buckets(corpus)
     emb = corpus  # pair scoring looks vectors up by vec_id
-    # OPTIMIZATION r13 (guide §2.3/§4.1 — phase-probed: the LSH seed,
-    # not the descent rounds, dominates this build; ~2.5M candidate
-    # pairs at sf0.1 each shipped BOTH vectors through Arrow): the
-    # bucket-companion set is symmetric by construction and the Arrow
-    # scorer's cosine(a,b) is bit-identical to cosine(b,a) (einsum
-    # products commute, same summation order over dims; norms multiply
-    # commutatively), so only the canonical src<dst half is
-    # deduplicated and scored — the mirror union below restores the
-    # full symmetric scored set with the exact same bits.
+    # The LSH seed, not the descent rounds, dominates this build
+    # (~2.5M candidate pairs at sf0.1, each shipping BOTH vectors
+    # through Arrow). The bucket-companion set is symmetric by
+    # construction and the Arrow scorer's cosine(a,b) is bit-identical
+    # to cosine(b,a) (einsum products commute, same summation order
+    # over dims; norms multiply commutatively), so only the canonical
+    # src<dst half is deduplicated and scored — the mirror union below
+    # restores the full symmetric scored set with the exact same bits.
     companions_lo = (
         sigs.select("band", "bucket", F.col("vec_id").alias("src"))
         .repartition(shuffle_parts(sigs), "band", "bucket")
@@ -7593,24 +7585,22 @@ def knn_graph_delta(
     )
     old_scored = None
     if graph is None:
-        # OPTIMIZATION r12: build the old graph WITH its cosines
-        # (``_knn_graph_scored``) so the merge below reuses the scores
-        # the build just computed, removing two corpus joins + a
-        # shuffle over the full old edge list from the plan. NOTE
-        # (ADVICE r12): the build's exact branch sums dot products in a
-        # different order than ``_verified_pair_cosines`` (codegen
-        # sequential SUM vs numpy pairwise), so reused scores are
-        # empirically identical after the 6-dp round at committed SFs,
-        # not bit-identical by construction — the merge below dedups
-        # with an order-independent MAX so a ulp flip cannot make the
-        # survivor nondeterministic.
+        # Build the old graph WITH its cosines (``_knn_graph_scored``)
+        # so the merge below reuses the scores the build just computed,
+        # with no corpus joins or shuffle over the old edge list. The
+        # build's exact branch sums dot products in a different order
+        # than ``_verified_pair_cosines`` (codegen sequential SUM vs
+        # numpy pairwise), so reused scores are empirically identical
+        # after the 6-dp round at committed SFs, not bit-identical by
+        # construction — the merge below dedups with an
+        # order-independent MAX so a ulp flip cannot make the survivor
+        # nondeterministic.
         old_scored = _knn_graph_scored(
             corpus.filter(~is_new(F.col("vec_id"))), m
         )
         graph = old_scored.select("src", "dst")
     if sigs is None:
-        n_bits, band_bits = _srp_dims(emb)
-        sigs = srp_buckets(emb, n_bits=n_bits, band_bits=band_bits)
+        sigs = srp_buckets(emb)
     sigs = sigs.filter(F.col("vec_id") >= n_queries)
     from ..operators.analytics import exact_row_number
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import source_rows
+
 # Stopword set for quality scoring / language ID. Deliberately small and
 # deterministic; 'the'/'a' occur in the testdata vocabulary.
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
@@ -567,14 +569,11 @@ def perplexity_buckets(
     one row per document — the only all-to-one step, and it moves
     doc-count rows, not tokens; swap for approx quantile cuts when even
     that is too much."""
-    # OPTIMIZATION r13 (VERDICT item 6): the global NTILE ran as an
-    # UNGOVERNED single-partition window over one row per document.
-    # ntile_governed keeps the window below the size bound and switches
-    # to exact_ntile's distributed two-phase rank beyond it — both
-    # bit-identical on the tie-free (avg_logprob, doc_id) key. The
-    # sizing count scans the raw docs table (scored has ≤ one row per
-    # doc, so it is a valid upper bound and the logprob pipeline never
-    # re-executes for sizing).
+    # ntile_governed keeps the global NTILE window below the size bound
+    # and switches to exact_ntile's distributed two-phase rank beyond
+    # it — both bit-identical on the tie-free (avg_logprob, doc_id)
+    # key. scored has ≤ one row per doc, so the raw docs' row count
+    # bounds it and sizing never executes the logprob pipeline.
     from ..operators.analytics import ntile_governed
 
     scored = doc_bigram_logprob(docs)
@@ -583,7 +582,7 @@ def perplexity_buckets(
         n_buckets,
         [F.col("avg_logprob"), F.col("doc_id")],
         "bucket",
-        docs.count(),
+        source_rows(docs),
     )
     return (
         b.groupBy("bucket")

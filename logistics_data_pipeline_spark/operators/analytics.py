@@ -442,9 +442,9 @@ def exact_ntile(
     return ranked.withColumn(out_name, bucket.cast("int")).drop("_rank")
 
 
-# Size governor for the NTILE form (OPTIMIZATION r13, VERDICT item 6):
-# up to this many input rows a single-partition window is both correct
-# and CHEAPER than exact_ntile's two-phase rank (range exchange + eager
+# Size governor for the NTILE form: up to this many input rows a
+# single-partition window is both correct and CHEAPER than
+# exact_ntile's two-phase rank (range exchange + eager
 # checkpoint + offset collect ≈ 3 extra jobs — measured 1.65 → 4.3 s on
 # events_zorder_extents at sf0.1 when exact_ntile ran unconditionally);
 # beyond it the distributed rank is the only shape that scales. Both
@@ -458,11 +458,12 @@ def ntile_governed(
     df: DataFrame, n_buckets: int, sort_cols, out_name: str, n_rows: int
 ) -> DataFrame:
     """NTILE(k) over a total order with the size governor above.
-    ``n_rows`` is a cheap pre-computed row-count UPPER BOUND for ``df``
-    (callers count their raw source, not the derived frame, so the
-    sizing action never re-executes a pipeline). The sub-bound regime
-    IS the `WindowExec: No Partition Defined` warning the gate logs for
-    these call sites — bounded by construction here."""
+    ``n_rows`` is a row-count UPPER BOUND for ``df``: callers pass
+    ``session.source_rows`` of their raw source (Parquet footers, no
+    job), never a count of the derived frame, so sizing never executes
+    a pipeline. The sub-bound regime IS the `WindowExec: No Partition
+    Defined` warning the gate logs for these call sites — bounded by
+    construction here."""
     if n_rows <= NTILE_WINDOW_BOUND:
         w = Window.orderBy(*sort_cols)
         return df.withColumn(out_name, F.ntile(n_buckets).over(w))

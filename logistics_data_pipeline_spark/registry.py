@@ -136,12 +136,6 @@ def _stg_build(spark, sf):
     return stg
 
 
-def _srp_sigs_build(spark, sf):
-    emb = _emb(spark, sf)
-    nb, bb = llm_sim._srp_dims(emb)
-    return llm_sim.srp_buckets(emb, n_bits=nb, band_bits=bb)
-
-
 _ASSETS: dict[str, QueryFn] = {
     "stg": _stg_build,
     "valid": lambda spark, sf: validity.valid_events(_stg(spark, sf)),
@@ -168,7 +162,7 @@ _ASSETS: dict[str, QueryFn] = {
     # exact cosine near-dup pairs (block-pair join)
     "emb_pairs": lambda spark, sf: llm_sim.embedding_neardup(_emb(spark, sf)),
     # SRP-LSH banded signatures at the governor width
-    "srp_sigs": _srp_sigs_build,
+    "srp_sigs": lambda spark, sf: llm_sim.srp_buckets(_emb(spark, sf)),
     # item-pagerank graph table
     "copurchase_edges": lambda spark, sf: analytics.copurchase_edges(
         load_table(spark, sf, "lineitem")

@@ -12,6 +12,7 @@ see SURVEY.md §2.8).
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
@@ -70,6 +71,30 @@ def shuffle_parts(df) -> int:
     serializes a 1000-executor cluster; here it tracks
     spark.sql.shuffle.partitions, which tune() sizes from the env)."""
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def source_rows(df) -> int:
+    """Row count a size governor picks its regime from — the one sizing
+    point for every governor.
+
+    When every file behind ``df`` is a local Parquet file, this is the
+    sum of the footers' ``num_rows``, read on the driver: no Spark job
+    runs. Otherwise (in-memory or checkpointed frames, which have no
+    input files, and non-local schemes) it is ``df.count()``.
+
+    Contract: exact for a bare scan of one table; an UPPER bound for a
+    filter, a projection or a 1:1 map of one table. It is NOT a bound
+    for joins, unions with in-memory frames or explodes — governors
+    must pass the frame they size in one of the first forms. At cluster
+    scale, a table format's manifest row count goes here."""
+    files = [urlparse(f) for f in df.inputFiles()]
+    if files and all(
+        u.scheme in ("", "file") and u.path.endswith(".parquet") for u in files
+    ):
+        import pyarrow.parquet as pq
+
+        return sum(pq.read_metadata(unquote(u.path)).num_rows for u in files)
+    return df.count()
 
 
 def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:

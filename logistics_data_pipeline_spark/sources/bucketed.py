@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import source_rows
+
 
 def write_bucketed(
     df: DataFrame, table: str, key: str, buckets: int = 8, sort: bool = True
@@ -129,17 +131,14 @@ def zorder_extents(events: DataFrame) -> DataFrame:
         )
     )
     g = g.withColumn("z", _morton_interleave(F.col("gu"), F.col("gt"), ZORDER_BITS))
-    # OPTIMIZATION r13 (VERDICT item 6): both NTILEs ran as
-    # UNGOVERNED single-partition windows over every event — the
-    # event-count-sized unpartitioned-window class that cannot scale.
     # ntile_governed keeps the (cheaper) window below the bound and
     # switches to exact_ntile's distributed two-phase rank beyond it;
     # both are bit-identical on the tie-free (key, event_id) orders the
-    # oracle mirrors. The sizing count scans the raw event projection
-    # (g is a 1:1 derivation of it).
+    # oracle mirrors. g is a 1:1 map of the event projection, so the
+    # projection's row count sizes it.
     from ..operators.analytics import ntile_governed
 
-    n_ev = base.count()
+    n_ev = source_rows(base)
     bucketed = ntile_governed(
         ntile_governed(g, ZORDER_FILES, [F.col("z"), F.col("event_id")], "bz", n_ev),
         ZORDER_FILES,

@@ -24,7 +24,7 @@ import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
-from typing import TYPE_CHECKING, Any, Iterator
+from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,8 +40,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-if TYPE_CHECKING:  # pragma: no cover
-    pass
+from ..session import source_rows
 
 SESSION_GAP_S = 1800  # same 30-min gap as the batch sessionizer
 
@@ -73,9 +72,9 @@ JSON_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 # which these throwaway replays always have).
 REPLAY_STATE_PARTITIONS = 8
 
-# TIERED (VERDICT r10 #4): the sf10 profile (tools/sessionize_profile.py,
-# SCALING_r11) attributed stream_sessionize_closed's decade factor —
-# state commits are FLAT (1.1-1.6 s at every decade) and plan overhead
+# Tiered: the sf10 profile (tools/sessionize_profile.py, SCALING_r11)
+# attributed stream_sessionize_closed's decade factor — state commits
+# are FLAT (1.1-1.6 s at every decade) and plan overhead
 # is <1 s; the cost is the Arrow fold's task time (25.7 / 82.5 / 718 s
 # at 10^5/10^6/10^7 events, linear in rows) running on only 8 of 32
 # cores. So the governor shrinks the shard count ONLY while the replay
@@ -93,25 +92,22 @@ REPLAY_MAX_BATCHES = 2
 
 class _replay_shuffle_parts:
     """Temporarily pin spark.sql.shuffle.partitions for a bounded
-    streaming replay, restoring the session value on exit. Pass the
-    replay's input row count via ``n_rows`` to engage the size tier:
-    small replays (commit-bound) shrink to ``REPLAY_STATE_PARTITIONS``
-    shards, replays of ≥ ``REPLAY_WIDE_ROWS`` rows (compute-bound — the
-    fold dwarfs the per-shard commit) keep the session width."""
+    streaming replay of ``n_rows`` input rows (``source_rows`` of the
+    replayed frame), restoring the session value on exit: small replays
+    (commit-bound) shrink to ``REPLAY_STATE_PARTITIONS`` shards,
+    replays of ≥ ``REPLAY_WIDE_ROWS`` rows (compute-bound — the fold
+    dwarfs the per-shard commit) keep the session width."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        n: int = REPLAY_STATE_PARTITIONS,
-        n_rows: int | None = None,
-    ):
-        self.spark, self.n = spark, n
-        self.wide = n_rows is not None and n_rows >= REPLAY_WIDE_ROWS
+    def __init__(self, spark: SparkSession, n_rows: int):
+        self.spark = spark
+        self.wide = n_rows >= REPLAY_WIDE_ROWS
 
     def __enter__(self):
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
         if not self.wide:
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+            self.spark.conf.set(
+                "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
+            )
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
@@ -450,7 +446,7 @@ def sessionize_closed_batch(spark: SparkSession, events: DataFrame) -> DataFrame
     restart tests); committed SFs dump ≤ 10 files and keep today's
     single-batch layout."""
     name = f"sessions_{uuid.uuid4().hex[:8]}"
-    n_rows = events.count()  # sizes the shard tier (metadata-cheap)
+    n_rows = source_rows(events)  # sizes the shard tier
     with _scratch_dir("sessionize_") as work:
         src = f"{work}/src"
         events.select("event_id", "ts", "user_id", "event_type", "value").write.mode(
@@ -589,18 +585,17 @@ def click_attribution_stream_batch(spark: SparkSession, events: DataFrame) -> Da
     user, click in the half-open 30-minute window ending at the
     purchase instant."""
     name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    # shard tier sized to the replayed topics, not the whole firehose
-    n_rows = events.filter(
-        F.col("event_type").isin("purchase", "click")
-    ).count()
+    # replay only the two joined topics (production subscribes the join
+    # to the purchase/click topics, not the whole firehose) and size the
+    # shard tier to them
+    topics = events.filter(F.col("event_type").isin("purchase", "click"))
+    n_rows = source_rows(topics)
     with _scratch_dir("ssjoin_") as work:
         src = f"{work}/src"
-        # replay only the two joined topics (production subscribes the
-        # join to the purchase/click topics, not the whole firehose) in
         # 8 files / 2 micro-batches — join state still carries across a
         # batch boundary, at half the per-batch state-store commit
         # overhead
-        events.filter(F.col("event_type").isin("purchase", "click")).select(
+        topics.select(
             "event_id", "ts", "user_id", "event_type", "value"
         ).coalesce(8).write.mode("overwrite").option(
             "timestampFormat", JSON_TS_FMT
@@ -655,7 +650,7 @@ def enrich_counts_stream_batch(spark: SparkSession, events: DataFrame) -> DataFr
         )
     )
     name = f"enrich_{uuid.uuid4().hex[:8]}"
-    n_rows = events.count()  # sizes the shard tier
+    n_rows = source_rows(events)  # sizes the shard tier
     with _scratch_dir("enrich_") as work:
         src = f"{work}/src"
         events.select("event_id", "ts", "user_id", "event_type", "value").write.mode(
@@ -726,7 +721,7 @@ def hopping_counts_stream_batch(spark: SparkSession, events: DataFrame) -> DataF
     The DuckDB oracle is the same hopping expansion the batch
     ``events_hopping_windows`` key proves."""
     name = f"hopping_{uuid.uuid4().hex[:8]}"
-    n_rows = events.count()  # sizes the shard tier
+    n_rows = source_rows(events)  # sizes the shard tier
     with _scratch_dir("hopping_") as work:
         src = f"{work}/src"
         events.select("event_id", "ts", "user_id", "event_type", "value").write.mode(
@@ -769,7 +764,7 @@ def dedup_counts_stream_batch(spark: SparkSession, events: DataFrame) -> DataFra
     name = f"streamdedup_{uuid.uuid4().hex[:8]}"
     # the replay input is the DOUBLED stream; its state is one row per
     # distinct event_id in the horizon, so size the tier to that
-    n_rows = events.count()
+    n_rows = source_rows(events)
     with _scratch_dir("streamdedup_") as work:
         src = f"{work}/src"
         cols = ["event_id", "ts", "user_id", "event_type", "value"]

@@ -355,8 +355,96 @@ def test_replay_shard_tier_widens_past_bound(spark):
         with _replay_shuffle_parts(spark, n_rows=REPLAY_WIDE_ROWS):
             assert spark.conf.get(key) == "24"
         assert spark.conf.get(key) == "24"
-        with _replay_shuffle_parts(spark):  # no row count -> legacy shrink
-            assert spark.conf.get(key) == str(REPLAY_STATE_PARTITIONS)
-        assert spark.conf.get(key) == "24"
     finally:
         spark.conf.set(key, orig)
+
+
+def test_source_rows_reads_footers_without_a_job(spark, sf_dir):
+    """session.source_rows: exact on a bare scan, an upper bound on a
+    filter, count() on frames without input files — and a file-backed
+    call submits no Spark job."""
+    from pyspark.sql import functions as F
+
+    from logistics_data_pipeline_spark.adapters.testdata import load_table
+    from logistics_data_pipeline_spark.session import source_rows
+
+    events = load_table(spark, sf_dir, "events")
+    sc = spark.sparkContext
+    group = "test:source_rows"
+    sc.setJobGroup(group, "source_rows footer read")
+    try:
+        n = source_rows(events)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert n == events.count()
+    purchases = events.filter(F.col("event_type") == "purchase")
+    assert source_rows(purchases) >= purchases.count()
+    checkpointed = purchases.localCheckpoint(eager=True)
+    assert source_rows(checkpointed) == checkpointed.count()
+    in_memory = spark.createDataFrame([(i,) for i in range(7)], "id long")
+    assert source_rows(in_memory) == in_memory.count() == 7
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_governor_regimes_from_source_rows_match_exact_counts(spark, sf_dir, sf):
+    """Every size governor picks the same regime from ``source_rows`` as
+    from the exact count() of the frame it sized before, at every
+    committed scale factor, so no committed output depends on which of
+    the two sized it."""
+    from pyspark.sql import functions as F
+
+    from logistics_data_pipeline_spark.adapters.testdata import load_table
+    from logistics_data_pipeline_spark.llm.multimodal import (
+        AHASH_BLOCKS,
+        AHASH_BYTES_PER_BLOCK,
+        _ahash_band_bits,
+        docs_as_media,
+    )
+    from logistics_data_pipeline_spark.llm.similarity import (
+        NSW_EXACT_BOUND,
+        NSW_N_QUERIES,
+        _srp_dims,
+    )
+    from logistics_data_pipeline_spark.operators.analytics import (
+        NTILE_WINDOW_BOUND,
+    )
+    from logistics_data_pipeline_spark.session import source_rows
+    from logistics_data_pipeline_spark.streaming.windowed import (
+        _replay_shuffle_parts,
+    )
+
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
+    events = load_table(spark, sf_dir, "events")
+    need = AHASH_BLOCKS * AHASH_BYTES_PER_BLOCK
+
+    def ntile_window(n):
+        return n <= NTILE_WINDOW_BOUND
+
+    def replay_wide(n):
+        return _replay_shuffle_parts(spark, n).wide
+
+    governors = {
+        "srp_dims": (_srp_dims, emb),
+        "nsw_exact": (
+            lambda n: n <= NSW_EXACT_BOUND,
+            emb.filter(F.col("vec_id") >= NSW_N_QUERIES),
+        ),
+        "ahash_band_bits": (
+            _ahash_band_bits,
+            docs_as_media(docs).filter(F.length("content") >= need),
+        ),
+        "ntile_perplexity": (ntile_window, docs),
+        "ntile_zorder": (ntile_window, events.select("event_id", "user_id", "ts")),
+        "replay_events": (replay_wide, events),
+        "replay_click_topics": (
+            replay_wide,
+            events.filter(F.col("event_type").isin("purchase", "click")),
+        ),
+    }
+    for name, (regime, frame) in governors.items():
+        bound, exact = source_rows(frame), frame.count()
+        assert bound >= exact, name
+        assert regime(bound) == regime(exact), (name, bound, exact)

@@ -31,7 +31,7 @@ import uuid
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from logistics_data_pipeline_spark.adapters.testdata import load_table  # noqa: E402
-from logistics_data_pipeline_spark.session import get_spark  # noqa: E402
+from logistics_data_pipeline_spark.session import get_spark, source_rows  # noqa: E402
 from logistics_data_pipeline_spark.streaming import windowed as w  # noqa: E402
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -44,7 +44,7 @@ DEFAULT_DIRS = [
 
 def profile(spark, sf_dir: str) -> dict:
     events = load_table(spark, sf_dir, "events")
-    n_rows = events.count()  # same sizing action the wrapper pays
+    n_rows = source_rows(events)  # same sizing the wrapper does
     name = f"prof_{uuid.uuid4().hex[:8]}"
     work = tempfile.mkdtemp(prefix="sessprof_")
     out: dict = {"sf_dir": sf_dir, "n_rows": n_rows}
