@@ -22,6 +22,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -589,9 +590,10 @@ def decontamination_panel(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    inherit = inheritable_thread_target(docs.sparkSession)
     with ThreadPoolExecutor(max_workers=4) as _pool:
         _legs = [
-            _pool.submit(fn)
+            _pool.submit(inherit(fn))
             for fn in (_leg_exact, _leg_fuzzy, _leg_sem, _leg_emb_ids)
         ]
         exact, fuzzy, sem_hit, emb_ids = [f.result() for f in _legs]

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import math
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -3125,12 +3126,13 @@ def ann_recall_panel(
     union slot."""
     from concurrent.futures import ThreadPoolExecutor
 
+    inherit = inheritable_thread_target(emb.sparkSession)
     with ThreadPoolExecutor(max_workers=5) as pool:
-        f_truth = pool.submit(
+        f_truth = pool.submit(inherit(
             lambda: knn_bruteforce(emb, n_queries, k)
             .select("query_id", F.col("neighbor_id").alias("t_id"))
             .localCheckpoint(eager=True)
-        )
+        ))
         legs_in = {
             "ivf": ivf if ivf is not None else (lambda: knn_ivf(emb, n_queries, k)),
             "ivfpq": ivfpq
@@ -3144,7 +3146,7 @@ def ann_recall_panel(
             else (lambda: knn_graph_beam_pq(emb, n_queries, k)),
         }
         futs = {
-            name: pool.submit(df) if callable(df) else None
+            name: pool.submit(inherit(df)) if callable(df) else None
             for name, df in legs_in.items()
         }
         legs_df = {
@@ -7365,9 +7367,10 @@ def _nn_descent_edges(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    inherit = inheritable_thread_target(corpus.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_comp = _pool.submit(_comp_scored)
-        _f_ring = _pool.submit(_ring_scored)
+        _f_comp = _pool.submit(inherit(_comp_scored))
+        _f_ring = _pool.submit(inherit(_ring_scored))
         comp_scored = _f_comp.result()
         ring_scored = _f_ring.result()
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
@@ -7679,9 +7682,10 @@ def knn_graph_delta(
     # branches are deterministic and meet at the same union.
     from concurrent.futures import ThreadPoolExecutor
 
+    inherit = inheritable_thread_target(emb.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_seed = _pool.submit(_seed_scored)
-        _f_old = _pool.submit(_old_scored)
+        _f_seed = _pool.submit(inherit(_seed_scored))
+        _f_old = _pool.submit(inherit(_old_scored))
         sc0 = _f_seed.result()
         old_scored = _f_old.result()
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))

@@ -9,8 +9,10 @@ fact_event's six FKs to their dims. (The reference's YAML has a typo'd
 is implemented here.)
 
 Each test yields one (test_name, violations) row; a green run is all
-zeros. Tests are plain aggregations — they compose into a handful of
-hash aggregates, no collects.
+zeros. Invariant: the whole suite, FK tests included, is ONE stacked
+aggregation — each table is scanned once, no dim is broadcast (dim_order
+and dim_time are high-cardinality, star.py), and the only join is the
+fill-in of zero-violation rows from the literal list of test names.
 """
 
 from __future__ import annotations
@@ -21,53 +23,40 @@ from pyspark.sql import functions as F
 from .validity import INVALID_REASONS
 
 
-def relationships_onepass(
-    fact: DataFrame, fks: list[tuple[str, DataFrame, str, str]]
-) -> DataFrame:
-    """All FK-integrity tests in ONE scan of the fact: broadcast-left-
-    join each (tiny) dim's key set, count unmatched non-null FKs as one
-    row of sums, then unpivot to (test_name, violations) rows. Replaces
-    N anti-join scans of the fact with one — the difference between N
-    full passes and one at 100 TB."""
-    joined = fact
-    flags = []
-    for i, (fk, parent, pk, name) in enumerate(fks):
-        keys = F.broadcast(parent.select(F.col(pk).alias(f"__pk_{i}")).distinct())
-        joined = joined.join(keys, F.col(fk) == F.col(f"__pk_{i}"), "left")
-        flags.append(
-            F.sum(
-                F.when(F.col(fk).isNotNull() & F.col(f"__pk_{i}").isNull(), 1).otherwise(0)
-            ).alias(name)
-        )
-    row = joined.agg(*flags)
-    names = [name for *_, name in fks]
-    stack_expr = ", ".join(f"'{n}', {n}" for n in names)
-    return row.selectExpr(
-        f"stack({len(names)}, {stack_expr}) as (test_name, violations)"
-    ).select("test_name", F.col("violations").cast("bigint").alias("violations"))
-
-
 def star_schema_tests(wh: dict[str, DataFrame]) -> DataFrame:
     """The full schema.yml suite over a built warehouse dict
-    (pipeline.build_warehouse output).
+    (pipeline.build_warehouse output), as one stacked aggregation.
 
-    Single-pass shape (round-2 rewrite of the 22-branch union): each
-    table is scanned ONCE, stacking its checked columns into
-    (test_name, value) rows (values cast to string — injective within a
-    check, so null/dup/accepted semantics survive). One
-    groupBy(test_name, value) then one groupBy(test_name) computes
-    every not_null / unique / accepted_values count from the group
-    sizes; a left join against the literal test list restores
-    zero-violation rows for empty tables. FK integrity keeps its own
-    one-scan broadcast-join pass (``relationships_onepass``). Net: 7
-    table scans + 2 small shuffles instead of 21 independent
-    aggregation branches (87 exchanges → 8)."""
+    Each table is scanned once, stacking its checked columns into
+    (test_name, value, is_parent) rows (values cast to string —
+    injective within a check, so null/dup/accepted semantics survive).
+    A relationship test stacks the fact's FK values as children
+    (is_parent = 0) and its dim's keys as parents (is_parent = 1). One
+    groupBy(test_name, value) counts the children (``cnt``) and flags a
+    parent; one groupBy(test_name) sums the violations: ``cnt`` of the
+    NULL value (not_null), of off-list values (accepted_values) or of
+    parentless values (relationships), and one per value with
+    ``cnt > 1`` (unique). FK values shuffle with map-side partial
+    aggregation and no side is broadcast; a left join from the literal
+    test list restores zero-violation rows for empty tables."""
     dims = [
         ("dim_time", "time_sk", "full_timestamp"),
         ("dim_location", "location_sk", "location_name"),
         ("dim_status", "status_sk", "status_name"),
         ("dim_carrier", "carrier_sk", "carrier_name"),
         ("dim_order", "order_sk", "order_id"),
+    ]
+    # (test_name, fact FK column, parent dim, parent key)
+    rels = [
+        (f"fact_{fk}_relationship", fk, dim, pk)
+        for fk, dim, pk in [
+            ("order_sk", "dim_order", "order_sk"),
+            ("time_sk", "dim_time", "time_sk"),
+            ("status_sk", "dim_status", "status_sk"),
+            ("origin_location_sk", "dim_location", "location_sk"),
+            ("destination_location_sk", "dim_location", "location_sk"),
+            ("carrier_sk", "dim_carrier", "carrier_sk"),
+        ]
     ]
     # (table_key, [(check_name, column), ...]) — one stack per table
     per_table: list[tuple[str, list[tuple[str, str]]]] = [
@@ -78,7 +67,8 @@ def star_schema_tests(wh: dict[str, DataFrame]) -> DataFrame:
         ("int_invalid_logistics_events",
          [("invalid_reason_accepted_values", "invalid_reason")]),
         ("fact_event",
-         [("is_late_delivery_accepted_values", "is_late_delivery")]),
+         [("is_late_delivery_accepted_values", "is_late_delivery")]
+         + [(n, fk) for n, fk, _, _ in rels]),
     ] + [
         (dim, [(f"{dim}_{sk}_not_null", sk), (f"{dim}_{sk}_unique", sk),
                (f"{dim}_{nk}_unique", nk)])
@@ -87,23 +77,26 @@ def star_schema_tests(wh: dict[str, DataFrame]) -> DataFrame:
 
     stacked = None
     for table_key, checks in per_table:
-        pairs = ", ".join(f"'{name}', CAST({col} AS STRING)" for name, col in checks)
+        rows = [(n, col, 0) for n, col in checks] + [
+            (n, pk, 1) for n, _, dim, pk in rels if dim == table_key
+        ]
+        exprs = ", ".join(f"'{n}', CAST({col} AS STRING), {p}" for n, col, p in rows)
         part = wh[table_key].selectExpr(
-            f"stack({len(checks)}, {pairs}) AS (test_name, value)"
+            f"stack({len(rows)}, {exprs}) AS (test_name, value, is_parent)"
         )
         stacked = part if stacked is None else stacked.unionByName(part)
 
-    notnull_names = [n for _, cs in per_table for n, _ in cs if n.endswith("_not_null")]
-    unique_names = [n for _, cs in per_table for n, _ in cs if n.endswith("_unique")]
     accepted: dict[str, list[str]] = {
         "invalid_reason_accepted_values": list(INVALID_REASONS),
         "is_late_delivery_accepted_values": ["true", "false"],  # CAST(bool AS STRING)
     }
     cnt, val, name = F.col("cnt"), F.col("value"), F.col("test_name")
     viol = (
-        F.when(name.isin(notnull_names), F.when(val.isNull(), cnt).otherwise(0))
-        .when(name.isin(unique_names),
+        F.when(name.endswith("_not_null"), F.when(val.isNull(), cnt).otherwise(0))
+        .when(name.endswith("_unique"),
               F.when(val.isNotNull() & (cnt > 1), 1).otherwise(0))
+        .when(name.endswith("_relationship"),
+              F.when(val.isNotNull() & (F.col("parent") == 0), cnt).otherwise(0))
     )
     for acc_name, acc_vals in accepted.items():
         viol = viol.when(
@@ -112,31 +105,15 @@ def star_schema_tests(wh: dict[str, DataFrame]) -> DataFrame:
         )
     per_check = (
         stacked.groupBy("test_name", "value")
-        .agg(F.count("*").alias("cnt"))
+        .agg(F.sum(1 - F.col("is_parent")).alias("cnt"),
+             F.max("is_parent").alias("parent"))
         .groupBy("test_name")
         .agg(F.sum(viol).cast("bigint").alias("violations"))
     )
-    all_names = [n for _, cs in per_table for n, _ in cs]
-    spark = wh["fact_event"].sparkSession
-    expected = F.broadcast(
-        spark.createDataFrame([(n,) for n in all_names], "test_name string")
+    expected = wh["fact_event"].sparkSession.createDataFrame(
+        [(n,) for _, cs in per_table for n, _ in cs], "test_name string"
     )
-    base = expected.join(per_check, "test_name", "left").select(
+    return expected.join(per_check, "test_name", "left").select(
         "test_name",
         F.coalesce("violations", F.lit(0)).cast("bigint").alias("violations"),
     )
-    fk_block = relationships_onepass(
-        wh["fact_event"],
-        [
-            (fk, wh[dim], pk, f"fact_{fk}_relationship")
-            for fk, dim, pk in [
-                ("order_sk", "dim_order", "order_sk"),
-                ("time_sk", "dim_time", "time_sk"),
-                ("status_sk", "dim_status", "status_sk"),
-                ("origin_location_sk", "dim_location", "location_sk"),
-                ("destination_location_sk", "dim_location", "location_sk"),
-                ("carrier_sk", "dim_carrier", "carrier_sk"),
-            ]
-        ],
-    )
-    return base.unionByName(fk_block)

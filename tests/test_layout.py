@@ -178,3 +178,20 @@ def test_bucketed_gold_fact_dim_order_join(spark, sf_dir):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         for t in ("t_goldb_fact_event", "t_goldb_dim_order", "t_goldb_dim_time"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_schema_tests_plan_is_one_stacked_aggregation(spark, sf_dir):
+    """star_schema_tests, FK tests included, is one stacked aggregation:
+    its optimized plan holds exactly one Join (the fill-in of
+    zero-violation rows from the literal test list), and no side carries
+    a broadcast hint — dim_order and dim_time are high-cardinality."""
+    from logistics_data_pipeline_spark.adapters.testdata import bronze_events
+    from logistics_data_pipeline_spark.operators.schema_tests import star_schema_tests
+    from logistics_data_pipeline_spark.pipeline import build_warehouse
+
+    wh = build_warehouse(bronze_events(spark, sf_dir), persist=False)
+    plan = star_schema_tests(wh)._jdf.queryExecution().optimizedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Join ")]
+    assert len(joins) == 1, joins
+    assert "LeftOuter" in joins[0]
+    assert "strategy=broadcast" not in plan, plan

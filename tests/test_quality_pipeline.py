@@ -156,3 +156,111 @@ def test_merge_upsert_updates_and_inserts(spark):
     )
     got = {r.event_id: r.status for r in merge_upsert(target, updates).collect()}
     assert got == {"e1": "old", "e2": "new", "e3": "new"}
+
+
+def test_schema_tests_match_oracle_on_poisoned_warehouse(spark, sf_dir):
+    """A clean warehouse only ever yields all-zero schema tests, which a
+    suite that always returned 0 would also pass. Inject violations of
+    all four kinds into the sf0.001 warehouse (duplicate and NULL keys,
+    an off-list invalid_reason, orphan FKs from dropped dim_order rows
+    and overwritten fact time_sk values) and require the DuckDB oracle's
+    counts over the same frames."""
+    import duckdb
+    from check_correctness import compare
+    from pyspark.sql import functions as F
+
+    from logistics_data_pipeline_spark import oracles
+    from logistics_data_pipeline_spark.adapters.testdata import bronze_events
+    from logistics_data_pipeline_spark.operators.schema_tests import star_schema_tests
+
+    wh = build_warehouse(bronze_events(spark, sf_dir), persist=False)
+
+    def dup_and_null(df, key, *cols):
+        """``df`` plus a copy of its first row and a copy with a NULL key."""
+        df = df.select(key, *cols)
+        first = df.orderBy(key).limit(1)
+        null_key = F.lit(None).cast(df.schema[key].dataType)
+        return df.unionByName(first).unionByName(first.withColumn(key, null_key))
+
+    fks = ["order_sk", "time_sk", "status_sk", "origin_location_sk",
+           "destination_location_sk", "carrier_sk"]
+    orphan_time = F.when(F.col("event_sk").startswith("f"), F.lit("orphan"))
+    poisoned = {
+        "stg_logistics_events": dup_and_null(wh["stg_logistics_events"], "event_id"),
+        "int_valid_logistics_events": dup_and_null(
+            wh["int_valid_logistics_events"], "event_id"
+        ),
+        "int_invalid_logistics_events": wh["int_invalid_logistics_events"]
+        .select("invalid_reason")
+        .unionByName(spark.createDataFrame(
+            [("NOT_A_REASON",), ("NOT_A_REASON",), (None,)], "invalid_reason string"
+        )),
+        "fact_event": wh["fact_event"]
+        .withColumn("time_sk", orphan_time.otherwise(F.col("time_sk")))
+        .select("is_late_delivery", *fks),
+        "dim_time": dup_and_null(wh["dim_time"], "time_sk", "full_timestamp"),
+        "dim_location": dup_and_null(wh["dim_location"], "location_sk", "location_name"),
+        "dim_status": dup_and_null(wh["dim_status"], "status_sk", "status_name"),
+        "dim_carrier": dup_and_null(wh["dim_carrier"], "carrier_sk", "carrier_name"),
+        "dim_order": dup_and_null(
+            wh["dim_order"].filter(~F.col("order_sk").startswith("0")),
+            "order_sk", "order_id",
+        ),
+    }
+    # pin each frame's rows so Spark and DuckDB read the same ones
+    poisoned = {k: df.localCheckpoint() for k, df in poisoned.items()}
+    got = star_schema_tests(poisoned).toPandas()
+
+    oracle_names = {
+        "stg_logistics_events": "stg",
+        "int_valid_logistics_events": "valid",
+        "int_invalid_logistics_events": "invalid",
+    }
+    con = duckdb.connect()
+    for key, df in poisoned.items():
+        con.register(oracle_names.get(key, key), df.toPandas())
+    assert oracles.SCHEMA_TESTS_SQL.startswith(oracles.PRELUDE)
+    want = con.execute(oracles.SCHEMA_TESTS_SQL.removeprefix(oracles.PRELUDE)).df()
+    con.close()
+
+    assert compare("dbt_schema_tests", got, want) == []
+    failing = set(got.loc[got.violations > 0, "test_name"])
+    for kind in ("_not_null", "_unique", "_accepted_values", "_relationship"):
+        assert any(n.endswith(kind) for n in failing), (kind, sorted(failing))
+    assert {"fact_order_sk_relationship", "fact_time_sk_relationship"} <= failing
+
+
+def test_write_gold_jobs_stay_in_callers_job_group(spark, sf_dir, tmp_path):
+    """write_gold submits its writes from driver threads. Every job they
+    run must land in the caller's job group, or per-phase attribution
+    loses them (a plain thread starts with no job group)."""
+    import time
+
+    from logistics_data_pipeline_spark.adapters.testdata import bronze_events
+    from logistics_data_pipeline_spark.pipeline import write_gold
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group: str) -> int:
+        """Run one job in ``group`` and return its id once the status
+        store has recorded it (and so every job submitted before it)."""
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        sc.setJobGroup(None, None)
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(group) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        return max(tracker.getJobIdsForGroup(group))
+
+    wh = build_warehouse(bronze_events(spark, sf_dir), persist=False)
+    before = marker_job("gold-before")
+    sc.setJobGroup("gold-write", "write_gold")
+    try:
+        write_gold(wh, str(tmp_path / "gold"))
+    finally:
+        sc.setJobGroup(None, None)
+    after = marker_job("gold-after")
+    submitted = set(range(before + 1, after))
+    assert submitted
+    assert set(tracker.getJobIdsForGroup("gold-write")) == submitted
